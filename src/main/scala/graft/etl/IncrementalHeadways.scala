@@ -29,12 +29,6 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalHeadways {
 
-  /** Mart rows for `date` (ISO `yyyy-MM-dd`), exactly as the full
-    * recompute would produce them. `newEvents`: the staged events of that
-    * date. `prior`: staged events from any superset of "each key's latest
-    * arrival before `date`" (pass all history for exactness, a pruned
-    * lookback for economy).
-    */
   /** The maintained boundary source: one row per (line_id, stop_id) with
     * the key's latest arrival — O(active keys) rows, independent of
     * history depth. Passing this as `prior` to [[forDate]] replaces the
@@ -54,6 +48,12 @@ object IncrementalHeadways {
     lastArrivalState(state.select("line_id", "stop_id", "event_ts")
       .unionByName(newEvents.select("line_id", "stop_id", "event_ts")))
 
+  /** Mart rows for `date` (ISO `yyyy-MM-dd`), exactly as the full
+    * recompute would produce them. `newEvents`: the staged events of that
+    * date. `prior`: staged events from any superset of "each key's latest
+    * arrival before `date`" (pass all history for exactness, a pruned
+    * lookback for economy).
+    */
   def forDate(newEvents: DataFrame, prior: DataFrame, date: String): DataFrame = {
     val d = to_date(lit(date))
     val ev = newEvents.filter(col("event_ts").isNotNull &&

@@ -20,6 +20,9 @@ import graft.core.{GraftSession, Schemas}
   *    reference's Jinja glob-count guard, reproduced as a runtime FS check
   *    because Catalyst cannot plan a nonexistent path)
   *
+  * The raw zone is read with its declared schema ([[Schemas.rawArrivals]]),
+  * so no Spark job runs just to infer it from the snapshot footers.
+  *
   * Scale notes: the select is a pure projection over the scan — Catalyst
   * pushes column pruning into parquet, and hive partition discovery on
   * `date=` directories gives partition pruning for free the moment a date
@@ -45,7 +48,7 @@ object StgArrivals {
     GraftSession.tune(spark)
     val pattern = s"$rawDir/date=*/arrivals_*.parquet"
     if (!globNonEmpty(spark, pattern)) Schemas.emptyRelation(spark, Schemas.stgArrivals)
-    else fromRaw(spark.read.parquet(pattern))
+    else fromRaw(spark.read.schema(Schemas.rawArrivals).parquet(pattern))
   }
 
   /** The typed projection itself, reusable over any frame with the raw

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
@@ -267,11 +268,18 @@ object Sketches {
         .BloomFilterAggregate(es.head, es(1), es(2))
         .toAggregateExpression()))
 
+  /** Register the [[registry]] functions the session does not have yet.
+    * Runs on every `GraftSession.tune`; names already present (an earlier
+    * call, or [[graft.GraftExtensions]]) are left alone, so repeat calls
+    * neither rebuild them nor log Spark's "replaced a previously registered
+    * function" warning.
+    */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     registry.foreach { case (name, _, n, build) =>
-      reg.createOrReplaceTempFunction(name,
-        exprs => build(arity(name, n)(exprs)), "built-in")
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name,
+          exprs => build(arity(name, n)(exprs)), "built-in")
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.quality
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Data-quality expectations as data — the engine's reimplementation of the
@@ -13,10 +13,15 @@ import org.apache.spark.sql.functions._
   *    `ExpectColumnValuesToNotBeNull(line_id)`, both warning severity, on a
   *    ≤10k-row sample.
   *
-  * Design: all expectations against one frame evaluate in a SINGLE
-  * aggregation pass (one job, one scan) — each check is a conditional-count
-  * expression, so N checks cost one parquet scan regardless of N. At 100 TB
-  * that is the difference between one pass and N passes.
+  * Design: each check is a conditional-count expression, so N checks
+  * against one frame cost one pass regardless of N. Two ways to run that
+  * pass:
+  *
+  *  - [[check]] / [[run]]: a dedicated aggregation job over the frame;
+  *  - [[observe]]: the counts ride an action the caller already runs (a
+  *    table write, say) through `Dataset.observe` — no extra job, no
+  *    extra scan. The transform job checks its staging and mart tables
+  *    this way while writing them.
   *
   * GX parity notes: `Between` checks only non-null values (GX semantics —
   * nulls are the `NotNull` check's business); `sample` reproduces the
@@ -30,6 +35,7 @@ object Expectations {
 
   sealed trait Expectation {
     def name: String
+    def severity: Severity
     /** 1 when the row fails the expectation, else 0. */
     def failureFlag: Column
   }
@@ -76,12 +82,43 @@ object Expectations {
       sample: Option[Int] = None): Seq[Result] = {
     val byName = expectations.map(e => e.name -> e).toMap
     check(df, expectations, sample).collect().toSeq.map { r =>
-      val name = r.getString(0)
-      val failures = r.getLong(1)
-      Result(name, failures, failures == 0L, byName(name) match {
-        case NotNull(_, sev) => sev
-        case Between(_, _, _, sev) => sev
-      })
+      result(byName(r.getString(0)), r.getLong(1))
     }
+  }
+
+  private def result(e: Expectation, failures: Long): Result =
+    Result(e.name, failures, failures == 0L, e.severity)
+
+  /** Expectations attached to `frame` through `Dataset.observe`: whatever
+    * action consumes `frame` (exactly one) computes the failure counts and
+    * a row count on the side. [[rows]] and [[results]] block until that
+    * action has finished; calling them before running it blocks forever.
+    */
+  final class Observed private[Expectations] (val frame: DataFrame,
+      observation: Observation, expectations: Seq[Expectation]) {
+    private lazy val metrics = observation.get
+
+    /** Rows the consuming action saw. */
+    def rows: Long = metrics(RowsMetric).asInstanceOf[Long]
+
+    /** What [[run]] returns over the rows the action saw: same results,
+      * same order (by check name).
+      */
+    def results: Seq[Result] = expectations.sortBy(_.name).map { e =>
+      // sum over zero rows is null, as in check's coalesce
+      result(e, Option(metrics(e.name)).fold(0L)(_.asInstanceOf[Long]))
+    }
+  }
+
+  private val RowsMetric = "__rows"
+
+  /** Attach `expectations` and a row count to `df`; write or collect
+    * [[Observed.frame]] instead of `df`, then read the results.
+    */
+  def observe(df: DataFrame, expectations: Seq[Expectation]): Observed = {
+    val observation = Observation()
+    val aggs = expectations.map(e => sum(e.failureFlag).as(e.name))
+    new Observed(df.observe(observation, count(lit(1)).as(RowsMetric), aggs: _*),
+      observation, expectations)
   }
 }

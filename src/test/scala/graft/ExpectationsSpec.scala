@@ -45,6 +45,20 @@ class ExpectationsSpec extends AnyFunSuite {
     assert(r.head.failures == 0)
   }
 
+  test("observed checks ride the consuming action and equal run's results") {
+    val checks = Seq(NotNull("v", Warning), NotNull("id"), Between("v", 0, 3600))
+    val observed = Expectations.observe(df, checks)
+    assert(observed.frame.collect().length == 5)
+    assert(observed.rows == 5)
+    assert(observed.results == Expectations.run(df, checks))
+    // over zero rows every count is 0, not null
+    val none = Expectations.observe(df.filter("id > 100"), checks)
+    assert(none.frame.collect().isEmpty)
+    assert(none.rows == 0)
+    assert(none.results == Expectations.run(df.filter("id > 100"), checks))
+    assert(none.results.forall(_.passed))
+  }
+
   test("severity is carried through for warn-vs-error routing") {
     val r = Expectations.run(df, Seq(
       NotNull("id", Warning), Between("v", 0, 3600, Warning)))

@@ -95,6 +95,23 @@ class IncrementalSpec extends AnyFunSuite {
       "state-backed rerun must reproduce the staged-history result exactly")
   }
 
+  test("transformIncremental on a date with no raw files writes empty partitions") {
+    val root = Files.createTempDirectory("graft-inc-empty").toString
+    val raw = s"$root/raw"
+    (0 until 3).foreach { i =>
+      val at = Instant.parse("2025-11-20T10:00:00Z").plusSeconds(i * 120L)
+      Jobs.ingest(spark, raw, at, SyntheticArrivals.transport(at))
+    }
+    Jobs.transformIncremental(spark, raw, s"$root/silver", "2025-11-20")
+    Jobs.transformIncremental(spark, raw, s"$root/silver", "2025-11-21")
+    def read(table: String, d: String) = spark.read.parquet(s"$root/silver/$table/date=$d")
+    assert(read("stg_arrivals_by_date", "2025-11-21").isEmpty)
+    assert(read("fct_headways_by_date", "2025-11-21").isEmpty)
+    // the state carries the previous date's keys forward unchanged
+    sameFrames(read("state_last_arrival", "2025-11-21"),
+      read("state_last_arrival", "2025-11-20"))
+  }
+
   test("state path consults staged partitions NEWER than the state (crash gap)") {
     val root = Files.createTempDirectory("graft-inc-gap").toString
     val raw = s"$root/raw"

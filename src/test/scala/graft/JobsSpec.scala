@@ -6,8 +6,11 @@ import java.time.Instant
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.Schemas
 import graft.ingest.{Http, SyntheticArrivals}
 import graft.jobs.Jobs
+import graft.quality.Expectations
+import graft.quality.Expectations.{Between, NotNull, Warning}
 import graft.streaming.HeadwaysStream
 
 /** End-to-end pipeline tests: ingest → raw zone → transform → silver →
@@ -19,14 +22,35 @@ class JobsSpec extends AnyFunSuite {
 
   private val t0 = Instant.parse("2025-11-20T10:00:00Z")
 
+  /** Three 2-minute polls into `raw`, like the reference's cron; returns
+    * the rows ingested.
+    */
+  private def ingestThreePolls(raw: String): Long = (0 until 3).map { i =>
+    val at = t0.plusSeconds(i * 120L)
+    Jobs.ingest(spark, raw, at, SyntheticArrivals.transport(at))
+  }.sum
+
+  /** The transform's 11 checks recomputed the direct way: one
+    * `Expectations.run` scan per group over the written tables, GX on its
+    * 10k sample.
+    */
+  private def checksByScan(silver: String): Seq[Expectations.Result] = {
+    val stg = spark.read.parquet(s"$silver/stg_arrivals")
+    val fct = spark.read.parquet(s"$silver/fct_headways")
+    Expectations.run(stg,
+      Seq(NotNull("line_id"), NotNull("stop_id"), NotNull("event_ts"))) ++
+      Expectations.run(fct, Seq(
+        NotNull("line_id"), NotNull("stop_id"), NotNull("hour"),
+        NotNull("avg_headway_s"), NotNull("p50_headway_s"), NotNull("p90_headway_s"))) ++
+      Expectations.run(stg, Seq(
+        Between("time_to_station_s", 0, 3600, Warning),
+        NotNull("line_id", Warning)), sample = Some(10000))
+  }
+
   test("ingest appends hive-date-partitioned snapshots; transform builds silver; checks pass") {
     val root = Files.createTempDirectory("graft-e2e").toString
     val raw = s"$root/raw"
-    // three 2-minute polls, like the reference's cron
-    val n = (0 until 3).map { i =>
-      val at = t0.plusSeconds(i * 120L)
-      Jobs.ingest(spark, raw, at, SyntheticArrivals.transport(at))
-    }.sum
+    val n = ingestThreePolls(raw)
     assert(n > 0)
     val files = new java.io.File(s"$raw/date=2025-11-20").listFiles()
     assert(files != null && files.count(_.getName.endsWith(".parquet")) >= 1)
@@ -40,6 +64,78 @@ class JobsSpec extends AnyFunSuite {
     assert(fct.columns.toSeq == Seq("line_id", "stop_id", "hour",
       "avg_headway_s", "p50_headway_s", "p90_headway_s"))
     assert(results.filter(_.name.startsWith("not_null_p")).forall(_.passed))
+  }
+
+  test("transform's observed checks equal one Expectations.run scan per group") {
+    val root = Files.createTempDirectory("graft-checks").toString
+    val raw = s"$root/raw"
+    ingestThreePolls(raw)
+    val results = Jobs.transform(spark, raw, s"$root/silver")
+    assert(results.exists(_.failures > 0), "the synthetic polls carry dirty rows")
+    assert(results == checksByScan(s"$root/silver"))
+  }
+
+  test("above 10k staged rows the GX checks keep their sampled pass") {
+    val root = Files.createTempDirectory("graft-checks-big").toString
+    val raw = s"$root/raw"
+    // one raw snapshot of 10,050 rows in one file, so staging is one file
+    // in row order and the 10k sample is its first 10,000 rows. Rows 0-9
+    // and the last 50 are out of range; line ids are null at 7, 1007, ...,
+    // 10007: 10 in the sample, 11 in the table
+    val rows = (0 until 10050).map { i =>
+      val ttl = if (i < 10) -1L else if (i >= 10000) 4000L else (i % 1800).toLong
+      Schemas.Arrival(Some(SyntheticArrivals.Stops(i % 10)),
+        if (i % 1000 == 7) None else Some(SyntheticArrivals.Lines(i % 3)),
+        Some("Platform 1"), Some("Terminus"), Some(ttl),
+        Some(t0.plusSeconds(i.toLong).toString))
+    }
+    import spark.implicits._
+    val tmp = s"$root/tmp"
+    rows.toDF().coalesce(1).write.parquet(tmp)
+    val dateDir = new java.io.File(s"$raw/date=2025-11-20"); dateDir.mkdirs()
+    val part = new java.io.File(tmp).listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    assert(part.renameTo(new java.io.File(dateDir, "arrivals_20251120_100000.parquet")))
+
+    val results = Jobs.transform(spark, raw, s"$root/silver")
+    assert(results == checksByScan(s"$root/silver"))
+    // the staging not_null tests count the whole table, GX the sample
+    assert(results.take(3).find(_.name == "not_null_line_id").get.failures == 11)
+    assert(results.drop(9).map(r => r.name -> r.failures) == Seq(
+      "between_time_to_station_s_0.0_3600.0" -> 10L, "not_null_line_id" -> 10L))
+  }
+
+  test("transform over an empty raw zone returns 11 passing checks") {
+    val root = Files.createTempDirectory("graft-empty").toString
+    val results = Jobs.transform(spark, s"$root/raw", s"$root/silver")
+    assert(results.map(_.name) == checksByScan(s"$root/silver").map(_.name))
+    assert(results.size == 11 && results.forall(r => r.passed && r.failures == 0))
+    assert(spark.read.parquet(s"$root/silver/fct_headways").isEmpty)
+  }
+
+  test("transform on three polls runs as at most 3 Spark jobs") {
+    val root = Files.createTempDirectory("graft-jobcount").toString
+    val raw = s"$root/raw"
+    ingestThreePolls(raw)
+    val sc = spark.sparkContext
+    def inGroup[A](group: String)(body: => A): A = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+    }
+    val group = s"transform-${java.util.UUID.randomUUID()}"
+    inGroup(group)(Jobs.transform(spark, raw, s"$root/silver"))
+    // the status tracker is fed asynchronously but in order: once a later
+    // fence job shows up, every job of the transform has too
+    val fence = s"fence-${java.util.UUID.randomUUID()}"
+    inGroup(fence)(sc.parallelize(Seq(1), 1).count())
+    val deadline = System.nanoTime() + 30000000000L
+    while (sc.statusTracker.getJobIdsForGroup(fence).isEmpty &&
+      System.nanoTime() < deadline) Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(fence).nonEmpty)
+    val jobs = sc.statusTracker.getJobIdsForGroup(group)
+    // the staging write, then the mart write's shuffle and write stages: a
+    // schema-inference or check-only job would push this past 3
+    assert(jobs.nonEmpty && jobs.length <= 3, s"${jobs.length} jobs: ${jobs.sorted.toSeq}")
   }
 
   test("align writes one flat snapshot for the requested line, enriched via broadcast lookup") {
