@@ -122,14 +122,11 @@ object Jobs {
     * quality gate (the 9 dbt not_null tests + 2 GX checks on a 10k
     * sample). Returns the check results; callers decide error-vs-warn.
     *
-    * The checks ride the two table writes ([[Expectations.observe]]): the
-    * 3 staging not_null tests and both GX checks are counted while
-    * `stg_arrivals` is written, the 6 mart tests while `fct_headways` is,
-    * so the whole job is those writes (3 Spark jobs at poll scale). The GX
-    * checks are defined on a `limit 10000` sample; while staging holds at
-    * most 10k rows that sample is the whole table and the observed counts
-    * are exact. Only above 10k rows does the sampled GX pass re-scan
-    * staging, as before.
+    * The dbt tests ride the two table writes ([[Expectations.observe]]):
+    * the 3 staging not_null tests are counted while `stg_arrivals` is
+    * written, the 6 mart tests while `fct_headways` is. Only the 2 GX
+    * checks keep a pass of their own, over a `limit 10000` sample of the
+    * written staging table, so the job is 5 Spark jobs at poll scale.
     *
     * `lineage` (default off) emits an OpenLineage-shaped START/COMPLETE
     * run-event pair with the job's dataset URIs — the counterpart of the
@@ -143,23 +140,19 @@ object Jobs {
       inputs = Seq(rawDir),
       outputs = Seq(s"$silverDir/stg_arrivals", s"$silverDir/fct_headways")) {
       GraftSession.tune(spark)
-      val gxSample = 10000
-      val gxChecks = Seq(
-        Between("time_to_station_s", 0, 3600, Warning), NotNull("line_id", Warning))
-      val stgDbt = Expectations.observe(StgArrivals(spark, rawDir),
+      val stg = Expectations.observe(StgArrivals(spark, rawDir),
         Seq(NotNull("line_id"), NotNull("stop_id"), NotNull("event_ts")))
-      val stgGx = Expectations.observe(stgDbt.frame, gxChecks)
-      stgGx.frame.write.mode(SaveMode.Overwrite).parquet(s"$silverDir/stg_arrivals")
+      stg.frame.write.mode(SaveMode.Overwrite).parquet(s"$silverDir/stg_arrivals")
       val stgBack = spark.read.schema(Schemas.stgArrivals)
         .parquet(s"$silverDir/stg_arrivals")
       val fct = Expectations.observe(FctHeadways(stgBack), Seq(
         NotNull("line_id"), NotNull("stop_id"), NotNull("hour"),
         NotNull("avg_headway_s"), NotNull("p50_headway_s"), NotNull("p90_headway_s")))
       fct.frame.write.mode(SaveMode.Overwrite).parquet(s"$silverDir/fct_headways")
-      val gxResults =
-        if (stgGx.rows <= gxSample) stgGx.results
-        else Expectations.run(stgBack, gxChecks, sample = Some(gxSample))
-      stgDbt.results ++ fct.results ++ gxResults
+      val gx = Expectations.run(stgBack, Seq(
+        Between("time_to_station_s", 0, 3600, Warning),
+        NotNull("line_id", Warning)), sample = Some(10000))
+      stg.results ++ fct.results ++ gx
     }
 
   /** E2-incremental — maintain a DATE-PARTITIONED silver layout for one

@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   *  - [[check]] / [[run]]: a dedicated aggregation job over the frame;
   *  - [[observe]]: the counts ride an action the caller already runs (a
   *    table write, say) through `Dataset.observe` — no extra job, no
-  *    extra scan. The transform job checks its staging and mart tables
-  *    this way while writing them.
+  *    extra scan. The transform job runs its dbt tests this way while
+  *    writing its staging and mart tables.
   *
   * GX parity notes: `Between` checks only non-null values (GX semantics —
   * nulls are the `NotNull` check's business); `sample` reproduces the
@@ -90,16 +90,13 @@ object Expectations {
     Result(e.name, failures, failures == 0L, e.severity)
 
   /** Expectations attached to `frame` through `Dataset.observe`: whatever
-    * action consumes `frame` (exactly one) computes the failure counts and
-    * a row count on the side. [[rows]] and [[results]] block until that
-    * action has finished; calling them before running it blocks forever.
+    * action consumes `frame` (exactly one) computes the failure counts on
+    * the side. [[results]] blocks until that action has finished; calling
+    * it before running it blocks forever.
     */
   final class Observed private[Expectations] (val frame: DataFrame,
       observation: Observation, expectations: Seq[Expectation]) {
     private lazy val metrics = observation.get
-
-    /** Rows the consuming action saw. */
-    def rows: Long = metrics(RowsMetric).asInstanceOf[Long]
 
     /** What [[run]] returns over the rows the action saw: same results,
       * same order (by check name).
@@ -110,15 +107,13 @@ object Expectations {
     }
   }
 
-  private val RowsMetric = "__rows"
-
-  /** Attach `expectations` and a row count to `df`; write or collect
-    * [[Observed.frame]] instead of `df`, then read the results.
+  /** Attach `expectations` to `df`; write or collect [[Observed.frame]]
+    * instead of `df`, then read the results.
     */
   def observe(df: DataFrame, expectations: Seq[Expectation]): Observed = {
     val observation = Observation()
     val aggs = expectations.map(e => sum(e.failureFlag).as(e.name))
-    new Observed(df.observe(observation, count(lit(1)).as(RowsMetric), aggs: _*),
+    new Observed(df.observe(observation, aggs.head, aggs.tail: _*),
       observation, expectations)
   }
 }
