@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryDef, QueryModule, Tables}
+import graft.core.{QueryDef, QueryModule, Tables, TransientCache}
 import graft.text.TextFunctions._
 
 /** Text-analysis operator inventory over the `documents` fixture: token
@@ -342,7 +342,7 @@ object Text extends QueryModule {
         // per-wave totalsDelta calls (all waves non-empty here; an empty
         // wave would drop its (w,0,0) row, which the downstream SUM
         // treats identically).
-        val statsLeaf = stats.localCheckpoint()
+        val statsLeaf = TransientCache.leaf(stats)
         val totals = statsLeaf
           .groupBy(pmod(col("doc_id"), lit(4)).cast("long").as("batch_id"))
           .agg(count(lit(1)).as("n_docs"),
@@ -358,7 +358,7 @@ object Text extends QueryModule {
         quantizeBm25(graft.text.IncrementalBm25.scoreFromIndex(
           postings, stats, Seq("spark", "merge", "stream"),
           totalsLedger = Some(totals),
-          scope = df => df.localCheckpoint()))
+          scope = TransientCache.leaf))
       },
       Some(bm25OracleSql)),
   ) ++ queries2

@@ -28,12 +28,14 @@ import graft.dedup.Dedup
   * exact_new, admitted, first_match) — so downstream consumers can split
   * rejects by cause without re-deriving anything.
   *
-  * Exactly-once: every stage reads COMMITTED ledger state only, so the
-  * whole verdict is a pure function of (batch, committed ledgers);
-  * verdict commits FIRST, ledgers LAST (fps → bands → sigs), and the
-  * ledger rows are re-derived from the DURABLE verdict parquet
-  * ([[NearDupStream.writer]]'s recacheByPath argument — the in-memory
-  * plans read the very dirs the appends touch).
+  * Exactly-once by [[Wave]]'s argument: every stage reads COMMITTED
+  * ledger state only, so the whole verdict is a pure function of (batch,
+  * committed ledgers); the verdict commits FIRST, the ledgers LAST
+  * (bands → sigs → fps), derived from the committed verdict rows. The fp
+  * ledger commits after the band/sig deltas because they project the
+  * exact stage's output, which reads that ledger: with the wave's own
+  * fingerprints committed, a replay would find its exact-new docs
+  * "already seen" and commit empty band/sig deltas.
   */
 object CurationStream {
 
@@ -97,35 +99,16 @@ object CurationStream {
       qualityThreshold: Double = 0.7, simThreshold: Double = 0.5,
       portable: Boolean = false,
       compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
-      val scoped = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-      val waveScope: DataFrame => DataFrame =
-        d => { val p = d.persist(); scoped.add(p); p }
-      // quality + fingerprint in one pass over the batch source; every
-      // downstream frame reads this cache (lineage = batch source only,
-      // safe from the ledger appends' recacheByPath invalidation)
-      val scored = waveScope(batch.select(
-        col(idCol).as("id"), col(textCol).as("text"),
-        graft.text.TextFunctions.qualityScore(col(textCol)).as("quality"),
-        graft.text.TextFunctions.fingerprint(col(textCol)).as("fp")))
-      val exactNew = waveScope(scored
-        .filter(col("quality") >= qualityThreshold)
-        .join(DedupStream.ledgerFps(spark, fpsDir).select("fp").distinct(),
-          Seq("fp"), "left_anti")
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("fp").orderBy("id")))
-        .filter(col("rn") === 1).drop("rn"))
-      val toks = graft.text.TextFunctions.tokens(col("text"))
-      val sk = waveScope(exactNew.select(col("id"),
-        (if (portable) graft.functions.Sketches.minhashTokensPortable(toks)
-         else graft.functions.Sketches.minhashTokens(toks)).as("sig")))
+    Wave.writer(compactEvery)(compactLedgers(_, fpsDir, bandsDir, sigsDir)) { w =>
+      val scored = w.keep(scoredWave(w.batch, textCol, idCol))
+      val exactNew = w.keep(firstNewPerFp(
+        scored.filter(col("quality") >= qualityThreshold), w.spark, fpsDir))
+      val sk = w.keep(NearDupStream.sigSketch(exactNew, "text", "id", portable))
       val admission = Dedup.MinHashLsh.nearDupAdmitApproxSketched(
-        sk, NearDupStream.ledgerBandsApprox(spark, bandsDir),
-        NearDupStream.ledgerSigs(spark, sigsDir), simThreshold, waveScope,
+        sk, NearDupStream.ledgerBandsApprox(w.spark, bandsDir),
+        NearDupStream.ledgerSigs(w.spark, sigsDir), simThreshold, w.keep,
         hotBandCap = 4096)
-      val verdict = scored
+      val verdict = w.keep(scored
         .select(col("id").as("doc_id"), col("quality"),
           (col("quality") >= qualityThreshold).as("q_pass"))
         .join(exactNew.select(col("id").as("doc_id"),
@@ -136,32 +119,9 @@ object CurationStream {
         .select(col("doc_id"), col("quality"), col("q_pass"),
           coalesce(col("en"), lit(false)).as("exact_new"),
           coalesce(col("adm"), lit(false)).as("admitted"),
-          col("first_match"))
-        .persist()
-      try {
-        IdempotentSink.writer(verdictDir,
-          onReplay = _ => batch.foreach(_ => ()))(verdict, batchId)
-        // ledger rows from the JUST-COMMITTED verdict parquet (see the
-        // class doc); the joins hit the persisted scored/sk caches —
-        // batch-sized work, no stage re-runs
-        val durable = spark.read.parquet(s"$verdictDir/batch=$batchId")
-        IdempotentSink.writer(fpsDir, onReplay = _ => ())(
-          scored.join(durable.filter(col("exact_new"))
-            .select(col("doc_id").as("id")), Seq("id"))
-            .select("fp"), batchId)
-        val admittedSk = sk.join(durable.filter(col("admitted"))
-          .select(col("doc_id").as("id")), Seq("id"))
-        IdempotentSink.writer(bandsDir, onReplay = _ => ())(
-          Dedup.MinHashLsh.bandRowsOfSigs(admittedSk), batchId)
-        IdempotentSink.writer(sigsDir, onReplay = _ => ())(
-          admittedSk.select("id", "sig"), batchId)
-      } finally {
-        verdict.unpersist()
-        scoped.forEach(_.unpersist())
-      }
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        compactLedgers(spark, fpsDir, bandsDir, sigsDir)
-      ()
+          col("first_match")))
+      commitLedgers(w, verdictDir, fpsDir, bandsDir, sigsDir, scored, sk,
+        verdict)
     }
 
   /** [[writer]] with the remaining production stage composed in: quality
@@ -186,47 +146,29 @@ object CurationStream {
       simThreshold: Double = 0.5, gramN: Int = 5,
       portable: Boolean = false,
       compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
-      val scoped = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-      val waveScope: DataFrame => DataFrame =
-        d => { val p = d.persist(); scoped.add(p); p }
-      val scored = waveScope(batch.select(
-        col(idCol).as("id"), col(textCol).as("text"),
-        graft.text.TextFunctions.qualityScore(col(textCol)).as("quality"),
-        graft.text.TextFunctions.fingerprint(col(textCol)).as("fp")))
+    Wave.writer(compactEvery)(compactLedgers(_, fpsDir, bandsDir, sigsDir)) { w =>
+      val scored = w.keep(scoredWave(w.batch, textCol, idCol))
       val qp = scored.filter(col("quality") >= qualityThreshold)
       // static at-rest state: never appended by this pipeline, so the
       // cached flags plan is safe from recacheByPath invalidation
-      val benchGrams = spark.read.parquet(benchGramsDir)
-      // localCheckpoint, not a waveScope persist: the gram/broadcast
-      // subtree would otherwise be re-ANALYZED by each of the wave's ~6
-      // commit actions (persist substitutes the cache only after
-      // analysis) — measured +17 s/wave at sf0.1 with CPU flat, the
-      // q119 fold's driver-analysis lesson in streaming form. The
-      // checkpoint is wave-sized and eager; its blocks free via the
-      // ContextCleaner once the wave's frames are unreachable.
-      val flags = graft.pipeline.Curation.contaminationFlags(
+      val benchGrams = w.spark.read.parquet(benchGramsDir)
+      // a leaf, not a kept persist: the gram/broadcast subtree would
+      // otherwise be re-ANALYZED by each of the wave's ~6 commit actions
+      // (persist substitutes the cache only after analysis) — measured
+      // +17 s/wave at sf0.1 with CPU flat, the q119 fold's driver-analysis
+      // lesson in streaming form
+      val flags = w.own(graft.pipeline.Curation.contaminationFlags(
         qp.select("id", "text"), benchGrams, "text", "id", gramN)
-        .localCheckpoint()
-      val cleanDocs = qp.join(
-        flags.filter(!col("contaminated")).select("id"), Seq("id"))
-      val exactNew = waveScope(cleanDocs
-        .join(DedupStream.ledgerFps(spark, fpsDir).select("fp").distinct(),
-          Seq("fp"), "left_anti")
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("fp").orderBy("id")))
-        .filter(col("rn") === 1).drop("rn"))
-      val toks = graft.text.TextFunctions.tokens(col("text"))
-      val sk = waveScope(exactNew.select(col("id"),
-        (if (portable) graft.functions.Sketches.minhashTokensPortable(toks)
-         else graft.functions.Sketches.minhashTokens(toks)).as("sig")))
+        .localCheckpoint())
+      val exactNew = w.keep(firstNewPerFp(
+        qp.join(flags.filter(!col("contaminated")).select("id"), Seq("id")),
+        w.spark, fpsDir))
+      val sk = w.keep(NearDupStream.sigSketch(exactNew, "text", "id", portable))
       val admission = Dedup.MinHashLsh.nearDupAdmitApproxSketched(
-        sk, NearDupStream.ledgerBandsApprox(spark, bandsDir),
-        NearDupStream.ledgerSigs(spark, sigsDir), simThreshold, waveScope,
+        sk, NearDupStream.ledgerBandsApprox(w.spark, bandsDir),
+        NearDupStream.ledgerSigs(w.spark, sigsDir), simThreshold, w.keep,
         hotBandCap = 4096)
-      val verdict = scored
+      val verdict = w.keep(scored
         .select(col("id").as("doc_id"), col("quality"),
           (col("quality") >= qualityThreshold).as("q_pass"))
         .join(flags.select(col("id").as("doc_id"),
@@ -242,28 +184,44 @@ object CurationStream {
           coalesce(!col("contaminated"), lit(false)).as("clean"),
           coalesce(col("en"), lit(false)).as("exact_new"),
           coalesce(col("adm"), lit(false)).as("admitted"),
-          col("first_match"))
-        .persist()
-      try {
-        IdempotentSink.writer(verdictDir,
-          onReplay = _ => batch.foreach(_ => ()))(verdict, batchId)
-        val durable = spark.read.parquet(s"$verdictDir/batch=$batchId")
-        IdempotentSink.writer(fpsDir, onReplay = _ => ())(
-          scored.join(durable.filter(col("exact_new"))
-            .select(col("doc_id").as("id")), Seq("id"))
-            .select("fp"), batchId)
-        val admittedSk = sk.join(durable.filter(col("admitted"))
-          .select(col("doc_id").as("id")), Seq("id"))
-        IdempotentSink.writer(bandsDir, onReplay = _ => ())(
-          Dedup.MinHashLsh.bandRowsOfSigs(admittedSk), batchId)
-        IdempotentSink.writer(sigsDir, onReplay = _ => ())(
-          admittedSk.select("id", "sig"), batchId)
-      } finally {
-        verdict.unpersist()
-        scoped.forEach(_.unpersist())
-      }
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        compactLedgers(spark, fpsDir, bandsDir, sigsDir)
-      ()
+          col("first_match")))
+      commitLedgers(w, verdictDir, fpsDir, bandsDir, sigsDir, scored, sk,
+        verdict)
     }
+
+  /** Quality + fingerprint in one pass over the batch source; every
+    * downstream frame reads this (kept) frame, whose lineage is the batch
+    * source only. */
+  private def scoredWave(batch: DataFrame, textCol: String,
+      idCol: String): DataFrame =
+    batch.select(col(idCol).as("id"), col(textCol).as("text"),
+      graft.text.TextFunctions.qualityScore(col(textCol)).as("quality"),
+      graft.text.TextFunctions.fingerprint(col(textCol)).as("fp"))
+
+  /** The exact stage: `docs` whose fingerprint the committed fp ledger
+    * lacks, one per fingerprint (smallest id). */
+  private def firstNewPerFp(docs: DataFrame, spark: SparkSession,
+      fpsDir: String): DataFrame =
+    docs
+      .join(DedupStream.ledgerFps(spark, fpsDir).select("fp").distinct(),
+        Seq("fp"), "left_anti")
+      .withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy("fp").orderBy("id")))
+      .filter(col("rn") === 1).drop("rn")
+
+  /** Commit the verdict, then the bands → sigs → fps ledger deltas derived
+    * from the committed verdict rows joined to the kept wave frames. */
+  private def commitLedgers(w: Wave, verdictDir: String, fpsDir: String,
+      bandsDir: String, sigsDir: String, scored: DataFrame, sk: DataFrame,
+      verdict: DataFrame): Unit = {
+    w.commit(verdictDir, verdict)
+    val durable = w.committed(verdictDir)
+    val admittedSk = sk.join(durable.filter(col("admitted"))
+      .select(col("doc_id").as("id")), Seq("id"))
+    w.commit(bandsDir, Dedup.MinHashLsh.bandRowsOfSigs(admittedSk))
+    w.commit(sigsDir, admittedSk.select("id", "sig"))
+    w.commit(fpsDir, scored.join(durable.filter(col("exact_new"))
+      .select(col("doc_id").as("id")), Seq("id")).select("fp"))
+  }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.dedup.Dedup
@@ -24,20 +24,10 @@ import graft.dedup.Dedup
   * compact old `batch=` dirs into one bucketed-by-`fp` segment and the
   * anti-join's ledger exchange disappears).
   *
-  * Exactly-once across crash/replay, with NO cross-write transaction
-  * (the sink and ledger commit independently):
-  *
-  *  1. survivors are computed against the COMMITTED ledger only
-  *     ([[IdempotentSink.readCommitted]]) — a half-written ledger batch
-  *     is invisible, so the computation is a pure function of (batch
-  *     data, committed history) and every replay of a `batchId` derives
-  *     the identical survivor set;
-  *  2. survivors commit FIRST, the ledger LAST. A crash between the two
-  *     replays into: survivors marker present → data write skipped;
-  *     ledger marker absent → ledger batch rebuilt from the identical
-  *     recomputed set. The opposite order would be a data-loss bug: a
-  *     committed ledger without its survivors makes the replay see its
-  *     own fingerprints as "already seen" and admit nothing.
+  * Exactly-once across crash/replay by [[Wave]]'s commit-order argument:
+  * survivors are a pure function of (batch, COMMITTED ledger) and commit
+  * FIRST, the ledger LAST — the opposite order would make a replay see
+  * its own fingerprints as "already seen" and admit nothing.
   *
   * Reference shape: tfl-realtime-lakehouse re-snapshots and re-dedupes
   * whole tables per DAG run (`airflow/dags/tfl_transform_dag.py`); this
@@ -93,38 +83,17 @@ object DedupStream {
     * Emits one row per admitted fingerprint — (fp, keep_id, n_dups), the
     * [[graft.dedup.Dedup.exact]] survivor contract — under
     * `survivorsDir/batch=<id>`, and the admitted fingerprints under
-    * `ledgerDir/batch=<id>`.
-    *
-    * `compactEvery > 0` runs [[compactLedger]] from INSIDE the batch
-    * function once per that many batches (after the batch's own commits)
-    * — the built-in form of the maintenance cadence, satisfying the
-    * single-writer/between-micro-batches contract by construction:
-    * foreachBatch IS the micro-batch, so nothing else reads the ledger
-    * while it runs. A replayed batch may re-trigger a compaction — pure
-    * idempotent re-invocation (typically just the deferred sweep).
+    * `ledgerDir/batch=<id>`. A positive `compactEvery` runs
+    * [[compactLedger]] on [[Wave]]'s cadence.
     */
   def writer(survivorsDir: String, ledgerDir: String, textCol: String,
       idCol: String, compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-    val spark = batch.sparkSession
-    val survivors = Dedup.exactIncremental(
-      batch, textCol, idCol, ledgerFps(spark, ledgerDir)).persist()
-    // both writes action the same plan; the cache keeps the dedup +
-    // anti-join from running twice (and pins one consistent result even
-    // if it were nondeterministic — it is not, but cheap insurance)
-    try {
-      // marker-hit replays evaluate only the source batch (first sink) or
-      // nothing (second — the first already covered the source): no state
-      // store sits between the file source and these sinks, so the
-      // default full evaluation would re-run the dedup + anti-join for a
-      // discarded result
-      IdempotentSink.writer(survivorsDir,
-        onReplay = _ => batch.foreach(_ => ()))(survivors, batchId)
-      IdempotentSink.writer(ledgerDir, onReplay = _ => ())(
-        survivors.select("fp"), batchId)
-    } finally survivors.unpersist()
-    if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-      compactLedger(spark, ledgerDir)
-    ()
-  }
+    Wave.writer(compactEvery)(compactLedger(_, ledgerDir)) { w =>
+      // both commits action the same plan: kept so the dedup + anti-join
+      // runs once
+      val survivors = w.keep(Dedup.exactIncremental(
+        w.batch, textCol, idCol, ledgerFps(w.spark, ledgerDir)))
+      w.commit(survivorsDir, survivors)
+      w.commit(ledgerDir, survivors.select("fp"))
+    }
 }

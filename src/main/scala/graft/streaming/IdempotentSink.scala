@@ -43,12 +43,10 @@ object IdempotentSink {
     *
     * `onReplay` runs INSTEAD of the write when the batch's marker already
     * exists (a replayed batch whose data is durable). The default fully
-    * evaluates the frame — see step 5's rationale in the class doc — which
-    * for an expensive stateless plan pays the whole computation again for
-    * a discarded result. Callers whose frame has NO upstream state store
-    * below the expensive part (e.g. [[NearDupStream]]'s admission plan
-    * over a file source) pass a cheaper action that still evaluates the
-    * upstream source (`batch.foreach`) or nothing at all.
+    * evaluates the frame (see the marker-hit branch below), which for an
+    * expensive stateless plan pays the whole computation again for a
+    * discarded result. The ledger writers commit through [[Wave.commit]],
+    * whose replay rule (in [[Wave]]'s scaladoc) picks a cheaper action.
     */
   def writer(outDir: String,
       onReplay: DataFrame => Unit = _.foreach(_ => ())): (DataFrame, Long) => Unit =

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType,
   StructField, StructType}
 
@@ -31,13 +31,10 @@ import graft.dedup.Dedup
   * > maxHamming apart by construction, so no two ledger rows ever share
   * an identical fingerprint.
   *
-  * Exactly-once across crash/replay by [[NearDupStream]]'s argument
-  * (verdict-first / ledger-last, marker-skipped replays, admitted rows
-  * re-derived from the DURABLE verdict so the ledger append cannot
-  * invalidate the plan that computed it): admission is a pure function
-  * of (batch fingerprints, COMMITTED ledger), so every replay derives
-  * the identical verdict and rebuilds whichever ledger batch lacks its
-  * marker.
+  * Exactly-once across crash/replay by [[Wave]]'s argument: admission is
+  * a pure function of (batch fingerprints, COMMITTED ledger), the verdict
+  * commits first, and the chunk delta is derived from the committed
+  * verdict rows.
   */
 object MediaDedupStream {
 
@@ -99,50 +96,22 @@ object MediaDedupStream {
   def writer(verdictDir: String, chunksDir: String, idCol: String,
       fpCol: String, maxHamming: Int = 3,
       compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
-      // one persisted fingerprint frame per batch: the verdict and the
-      // ledger write both read it from cache, and its lineage reads only
-      // the batch source — safe from the recacheByPath invalidation the
-      // ledger append fires (the NearDupStream argument)
-      val all = batch.select(col(idCol).as("id"), col(fpCol).as("fp"))
-        .persist()
+    Wave.writer(compactEvery)(compactLedger(_, chunksDir)) { w =>
+      val all = w.keep(w.batch.select(col(idCol).as("id"), col(fpCol).as("fp")))
       val fps = all.filter(col("fp").isNotNull)
       val quarantined = all.filter(col("fp").isNull)
-        .select(col("id").as("doc_id"),
-          org.apache.spark.sql.functions.lit(false).as("admitted"),
-          org.apache.spark.sql.functions.lit(QuarantinedMatch)
-            .as("first_match"))
-      val scoped = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-      val waveScope: DataFrame => DataFrame =
-        d => { val p = d.persist(); scoped.add(p); p }
+        .select(col("id").as("doc_id"), lit(false).as("admitted"),
+          lit(QuarantinedMatch).as("first_match"))
       // hotChunkCap = 4096: the long-lived at-rest chunk ledger is the
       // hot-bucket-guard exposure (an adversarial storm can fix one
       // 16-bit chunk value and stay admitted — Dedup.fingerprintMatches)
-      val verdict = Dedup.fingerprintAdmit(fps, "id", "fp",
-        ledgerChunks(spark, chunksDir), maxHamming,
-        scope = waveScope, hotChunkCap = 4096)
-        .unionByName(quarantined).persist()
-      try {
-        IdempotentSink.writer(verdictDir,
-          onReplay = _ => batch.foreach(_ => ()))(verdict, batchId)
-        // admitted rows from the JUST-COMMITTED verdict parquet — the
-        // in-memory verdict plan's lineage reads the ledger dir this
-        // write appends to (see NearDupStream.writer for the full
-        // invalidation argument)
-        val admitted = fps.join(
-          spark.read.parquet(s"$verdictDir/batch=$batchId")
-            .filter(col("admitted"))
-            .select(col("doc_id").as("id")), Seq("id"))
-        IdempotentSink.writer(chunksDir, onReplay = _ => ())(
-          Dedup.fingerprintChunkRows(admitted, "id", "fp"), batchId)
-      } finally {
-        verdict.unpersist(); all.unpersist()
-        scoped.forEach(_.unpersist())
-      }
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        compactLedger(spark, chunksDir)
-      ()
+      val verdict = w.keep(Dedup.fingerprintAdmit(fps, "id", "fp",
+        ledgerChunks(w.spark, chunksDir), maxHamming,
+        scope = w.keep, hotChunkCap = 4096).unionByName(quarantined))
+      w.commit(verdictDir, verdict)
+      val admitted = fps.join(
+        NearDupStream.admittedIds(w, verdictDir), Seq("id"))
+      w.commit(chunksDir, Dedup.fingerprintChunkRows(admitted, "id", "fp"))
     }
 
   /** Incremental media CLUSTER maintenance — [[NearDupStream.clusterWriter]]
@@ -164,48 +133,30 @@ object MediaDedupStream {
   def clusterWriter(labelsDir: String, mergesDir: String, chunksDir: String,
       idCol: String, fpCol: String, maxHamming: Int = 3,
       compactEvery: Int = 16): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
-      val fps = batch.select(col(idCol).as("id"), col(fpCol).as("fp"))
-        .persist()
-      val scoped = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-      val waveScope: DataFrame => DataFrame =
-        d => { val p = d.persist(); scoped.add(p); p }
-      try {
-        val edges = waveScope(Dedup.fingerprintVerifiedPairs(
-          fps, "id", "fp", ledgerChunks(spark, chunksDir), maxHamming,
-          scope = waveScope, hotChunkCap = 4096))
-        val (labelRows, mergeRows) =
-          graft.dedup.IncrementalClusters.foldEdgeFrame(
-            fps, edges, NearDupStream.ledgerLabels(spark, labelsDir),
-            NearDupStream.ledgerMerges(spark, mergesDir), waveScope)
-        IdempotentSink.writer(labelsDir, onReplay = _ => ())(labelRows, batchId)
-        IdempotentSink.writer(mergesDir, onReplay = _ => ())(mergeRows, batchId)
-        IdempotentSink.writer(chunksDir, onReplay = _ => ())(
-          Dedup.fingerprintChunkRows(fps, "id", "fp"), batchId)
-      } finally {
-        fps.unpersist()
-        scoped.forEach(_.unpersist())
-      }
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        compactClusterLedgers(spark, labelsDir, mergesDir, chunksDir)
-      ()
+    Wave.writer(compactEvery)(
+        compactClusterLedgers(_, labelsDir, mergesDir, chunksDir)) { w =>
+      val fps = w.keep(w.batch.select(col(idCol).as("id"), col(fpCol).as("fp")))
+      val edges = w.keep(Dedup.fingerprintVerifiedPairs(
+        fps, "id", "fp", ledgerChunks(w.spark, chunksDir), maxHamming,
+        scope = w.keep, hotChunkCap = 4096))
+      val (labelRows, mergeRows) =
+        graft.dedup.IncrementalClusters.foldEdgeFrame(
+          fps, edges, NearDupStream.ledgerLabels(w.spark, labelsDir),
+          NearDupStream.ledgerMerges(w.spark, mergesDir), w.keep)
+      w.commit(labelsDir, w.own(labelRows))
+      w.commit(mergesDir, w.own(mergeRows))
+      w.commit(chunksDir, Dedup.fingerprintChunkRows(fps, "id", "fp"))
     }
 
-  /** Cluster-ledger maintenance for the media deployment: labels/merges
-    * compacted with the shared closure-form transforms
-    * ([[NearDupStream.compactClusterLedgers]]' contract), chunks
+  /** Cluster-ledger maintenance for the media deployment: the shared
+    * cluster state ([[NearDupStream.compactClusterState]]), chunks
     * (chunk, ckey)-bucketed. */
   def compactClusterLedgers(spark: SparkSession, labelsDir: String,
       mergesDir: String, chunksDir: String, buckets: Int = 8)
       : (Option[String], Option[String], Option[String]) = {
-    lazy val closure = graft.dedup.IncrementalClusters
-      .mergeClosure(NearDupStream.ledgerMerges(spark, mergesDir))
-    (LedgerCompaction.compact(spark, labelsDir, NearDupStream.LabelsSchema,
-        Seq("id"), buckets, NearDupStream.resolveLabelRows(closure)),
-      LedgerCompaction.compact(spark, mergesDir, NearDupStream.MergesSchema,
-        Seq("old_label"), buckets, NearDupStream.closureFormOf(closure)),
-      compactLedger(spark, chunksDir, buckets))
+    val (l, m) = NearDupStream.compactClusterState(spark, labelsDir,
+      mergesDir, buckets)
+    (l, m, compactLedger(spark, chunksDir, buckets))
   }
 
   /** [[writer]] over RAW IMAGE batches (doc_id, bytes): the real

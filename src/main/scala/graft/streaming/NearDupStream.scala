@@ -48,15 +48,10 @@ import graft.dedup.Dedup
   * re-lists and re-reads all of them — per-batch cost growing with
   * stream age, the exact small-file pathology compaction kills.
   *
-  * Exactly-once across crash/replay with NO cross-write transaction,
-  * by [[DedupStream]]'s argument extended to three sinks: admission is a
-  * pure function of (batch data, COMMITTED ledgers), and the verdict
-  * commits FIRST, the ledgers LAST. At any kill point a replay
-  * recomputes the identical verdict (committed ledgers unchanged —
-  * foreachBatch replays batch N before N+1 ever runs) and rebuilds
-  * whichever ledger batches lack markers; the reverse order would let a
-  * committed ledger without its verdict reject the replay's own
-  * documents.
+  * Exactly-once across crash/replay by [[Wave]]'s argument over three
+  * sinks: admission is a pure function of (batch data, COMMITTED
+  * ledgers), the verdict commits FIRST and the ledgers LAST, and the
+  * ledger deltas are derived from the durable verdict.
   */
 object NearDupStream {
 
@@ -95,10 +90,10 @@ object NearDupStream {
   // the incremental CLUSTER ledgers ([[clusterWriter]]): one label row per
   // doc, written in its own wave, plus append-only merge redirects — see
   // [[graft.dedup.IncrementalClusters]] for the state model
-  private[streaming] val LabelsSchema = StructType(Seq(
+  private val LabelsSchema = StructType(Seq(
     StructField("id", LongType),
     StructField("label", LongType)))
-  private[streaming] val MergesSchema = StructType(Seq(
+  private val MergesSchema = StructType(Seq(
     StructField("old_label", LongType),
     StructField("new_label", LongType)))
 
@@ -245,6 +240,34 @@ object NearDupStream {
     graft.dedup.IncrementalClusters.clusters(
       ledgerLabels(spark, labelsDir), ledgerMerges(spark, mergesDir))
 
+  /** The wave's (id, sig, sset, sz) frame from ONE shingle traversal
+    * (graft.functions.MinHashSigSet, sz = set length): admission and the
+    * ledger deltas all read it, instead of paying the shingle-hashing pass
+    * (the sketch stage's dominant cost) once per consumer. */
+  private def sigSetSketch(batch: DataFrame, textCol: String, idCol: String,
+      portable: Boolean): DataFrame = {
+    val toks = graft.text.TextFunctions.tokens(col(textCol))
+    batch
+      .select(col(idCol).as("id"),
+        (if (portable) graft.functions.Sketches.minhashSigSetPortable(toks)
+         else graft.functions.Sketches.minhashSigSet(toks)).as("ms"))
+      .select(col("id"), col("ms.sig").as("sig"), col("ms.sset").as("sset"))
+      .withColumn("sz", org.apache.spark.sql.functions.size(col("sset")))
+  }
+
+  /** The wave's (id, sig) frame — one minhash kernel pass. */
+  private[streaming] def sigSketch(batch: DataFrame, textCol: String,
+      idCol: String, portable: Boolean): DataFrame = {
+    val toks = graft.text.TextFunctions.tokens(col(textCol))
+    batch.select(col(idCol).as("id"),
+      (if (portable) graft.functions.Sketches.minhashTokensPortable(toks)
+       else graft.functions.Sketches.minhashTokens(toks)).as("sig"))
+  }
+
+  /** Ids of the docs admitted by this wave's committed verdict at `dir`. */
+  private[streaming] def admittedIds(w: Wave, dir: String): DataFrame =
+    w.committed(dir).filter(col("admitted")).select(col("doc_id").as("id"))
+
   /** The `foreachBatch` function:
     * {{{
     * stream.writeStream.foreachBatch(
@@ -252,96 +275,26 @@ object NearDupStream {
     * }}}
     * Emits one (doc_id, admitted, first_match) verdict row per batch doc
     * under `verdictDir/batch=<id>`, and the band/sset rows of ADMITTED
-    * docs under the two ledger dirs.
-    *
-    * `compactEvery > 0` runs [[compactLedgers]] from inside the batch
-    * function once per that many batches — the built-in maintenance
-    * cadence, single-writer-safe by construction (foreachBatch IS the
-    * micro-batch); see [[DedupStream.writer]] for the contract.
+    * docs under the two ledger dirs. A positive `compactEvery` runs
+    * [[compactLedgers]] on [[Wave]]'s cadence.
     */
   def writer(verdictDir: String, bandsDir: String, setsDir: String,
       textCol: String, idCol: String, threshold: Double = 0.5,
       portable: Boolean = false,
       compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
-      // ONE persisted sketch frame for the whole batch: sig and sset come
-      // from a single shingle traversal (graft.functions.MinHashSigSet,
-      // sz = set length), and admission plus BOTH ledger writes read it
-      // from cache — the previous independent bandsFor/setsFor plans paid
-      // the shingle-hashing pass (the sketch stage's dominant cost) four
-      // times per wave: twice inside admission, twice re-sketching the
-      // admitted docs. Lineage reads only the batch source (never the
-      // ledger dirs), so the ledger writes below cannot invalidate it.
-      // Batch-bounded memory, same persist contract as the verdict.
-      val toks = graft.text.TextFunctions.tokens(col(textCol))
-      val sk = batch
-        .select(col(idCol).as("id"),
-          (if (portable) graft.functions.Sketches.minhashSigSetPortable(toks)
-           else graft.functions.Sketches.minhashSigSet(toks)).as("ms"))
-        .select(col("id"), col("ms.sig").as("sig"), col("ms.sset").as("sset"))
-        .withColumn("sz", org.apache.spark.sql.functions.size(col("sset")))
-        .persist()
-      // tracked persist for the admission plan's internal mid-frames
-      // (banded batch rows, candidate pairs — each consumed by several
-      // subtrees): the default session-lifetime cache would accumulate
-      // one entry per wave forever on an unbounded stream, so the writer
-      // owns the lifecycle and releases them with the wave
-      val scoped = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-      val waveScope: DataFrame => DataFrame =
-        d => { val p = d.persist(); scoped.add(p); p }
+    Wave.writer(compactEvery)(compactLedgers(_, bandsDir, setsDir)) { w =>
+      val sk = w.keep(sigSetSketch(w.batch, textCol, idCol, portable))
       // hotBandCap = 4096: the long-lived at-rest band ledger is exactly
       // the hot-bucket-guard exposure (see Dedup.guardedCorpusCandidates)
       // — on the EXACT path identically to the approx one
-      val verdict = Dedup.MinHashLsh.nearDupAdmitSketched(
-        sk, batch,
-        ledgerBands(spark, bandsDir), ledgerSets(spark, setsDir),
-        threshold, waveScope, hotBandCap = 4096).persist()
-      try {
-        // on a marker-hit replay evaluate only the SOURCE batch, not the
-        // discarded admission plan: there is no state store between the
-        // file source and this sink (the admission joins are stateless),
-        // so the default full evaluation would pay the pipeline's most
-        // expensive plan twice per replayed batch for nothing — and in
-        // the crash window where this batch's ledger rows are already
-        // committed, pay it against ledgers containing the batch's own
-        // rows (result discarded either way; verdicts stay correct via
-        // the durable parquet read below)
-        IdempotentSink.writer(verdictDir,
-          onReplay = _ => batch.foreach(_ => ()))(verdict, batchId)
-        // the ledger writes re-derive the admitted set from the
-        // JUST-COMMITTED verdict parquet, not from the in-memory verdict
-        // plan: that plan's lineage reads the very ledger dirs the next
-        // two writes append to, and any cache invalidation
-        // (CacheManager.recacheByPath fires when a written path overlaps
-        // a cached scan's roots) would re-derive the verdict against
-        // ledgers that already contain this batch — every doc then
-        // rejects against itself. Reading the durable verdict severs
-        // that lineage entirely; on a replay whose verdict marker
-        // already exists the batch dir is present and identical, so the
-        // read is the same either way. The admitted filter joins the
-        // PERSISTED sketch to the durable verdict — batch-sized work, no
-        // re-traversal, and sk's lineage (batch source only) keeps it
-        // safe from the recacheByPath invalidation the ledger writes fire.
-        val admittedSk = sk.join(
-          spark.read.parquet(s"$verdictDir/batch=$batchId")
-            .filter(col("admitted"))
-            .select(col("doc_id").as("id")), Seq("id"))
-        // ledger sinks: a marker-hit replay needs no evaluation at all —
-        // the verdict sink above already evaluated the batch source, and
-        // these frames are projections of the durable verdict ⨝ sketch
-        IdempotentSink.writer(bandsDir, onReplay = _ => ())(
-          Dedup.MinHashLsh.bandRowsOf(admittedSk.select("id", "sig", "sz")),
-          batchId)
-        IdempotentSink.writer(setsDir, onReplay = _ => ())(
-          admittedSk.select("id", "sset"), batchId)
-      } finally {
-        verdict.unpersist(); sk.unpersist()
-        scoped.forEach(_.unpersist())
-      }
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        compactLedgers(spark, bandsDir, setsDir)
-      ()
+      val verdict = w.keep(Dedup.MinHashLsh.nearDupAdmitSketched(
+        sk, w.batch, ledgerBands(w.spark, bandsDir),
+        ledgerSets(w.spark, setsDir), threshold, w.keep, hotBandCap = 4096))
+      w.commit(verdictDir, verdict)
+      val admittedSk = sk.join(admittedIds(w, verdictDir), Seq("id"))
+      w.commit(bandsDir,
+        Dedup.MinHashLsh.bandRowsOf(admittedSk.select("id", "sig", "sz")))
+      w.commit(setsDir, admittedSk.select("id", "sset"))
     }
 
   /** APPROXIMATE (signature-only) streaming admission — [[writer]] with
@@ -362,58 +315,27 @@ object NearDupStream {
     * intersections — the verify stage is a codegen `sig_agreement` over
     * two 32-long arrays.
     *
-    * Same exactly-once protocol as [[writer]] (verdict-first /
-    * ledgers-last, marker-skipped replays, re-derive-from-durable-verdict
-    * severing the recacheByPath invalidation) — the argument there is
-    * mode-agnostic: admission is a pure function of (batch data,
-    * COMMITTED ledgers) in both modes. `compactEvery` runs
-    * [[compactLedgersApprox]] on the same cadence contract.
+    * Same [[Wave]] protocol and commit order as [[writer]]; `compactEvery`
+    * runs [[compactLedgersApprox]].
     */
   def approxWriter(verdictDir: String, bandsDir: String, sigsDir: String,
       textCol: String, idCol: String, threshold: Double = 0.5,
       portable: Boolean = false,
       compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
-      val toks = graft.text.TextFunctions.tokens(col(textCol))
-      // ONE persisted (id, sig) frame per wave: admission and both ledger
-      // writes read it from cache; lineage reads only the batch source,
-      // so the ledger writes below cannot invalidate it
-      val sk = batch
-        .select(col(idCol).as("id"),
-          (if (portable) graft.functions.Sketches.minhashTokensPortable(toks)
-           else graft.functions.Sketches.minhashTokens(toks)).as("sig"))
-        .persist()
-      // one count materializes the wave persist AND feeds the verify-
+    Wave.writer(compactEvery)(compactLedgersApprox(_, bandsDir, sigsDir)) { w =>
+      val sk = w.keep(sigSketch(w.batch, textCol, idCol, portable))
+      // one count materializes the kept sketch AND feeds the verify-
       // broadcast gate (knownRows) — the admission plan then schedules no
       // extra driver job per wave (spec-pinned: constructing the verdict
       // frame with knownRows runs zero jobs)
       val waveRows = sk.count()
-      val scoped = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-      val waveScope: DataFrame => DataFrame =
-        d => { val p = d.persist(); scoped.add(p); p }
-      val verdict = Dedup.MinHashLsh.nearDupAdmitApproxSketched(
-        sk, ledgerBandsApprox(spark, bandsDir), ledgerSigs(spark, sigsDir),
-        threshold, waveScope, knownRows = Some(waveRows),
-        hotBandCap = 4096).persist()
-      try {
-        IdempotentSink.writer(verdictDir,
-          onReplay = _ => batch.foreach(_ => ()))(verdict, batchId)
-        val admittedSk = sk.join(
-          spark.read.parquet(s"$verdictDir/batch=$batchId")
-            .filter(col("admitted"))
-            .select(col("doc_id").as("id")), Seq("id"))
-        IdempotentSink.writer(bandsDir, onReplay = _ => ())(
-          Dedup.MinHashLsh.bandRowsOfSigs(admittedSk), batchId)
-        IdempotentSink.writer(sigsDir, onReplay = _ => ())(
-          admittedSk.select("id", "sig"), batchId)
-      } finally {
-        verdict.unpersist(); sk.unpersist()
-        scoped.forEach(_.unpersist())
-      }
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        compactLedgersApprox(spark, bandsDir, sigsDir)
-      ()
+      val verdict = w.keep(Dedup.MinHashLsh.nearDupAdmitApproxSketched(
+        sk, ledgerBandsApprox(w.spark, bandsDir), ledgerSigs(w.spark, sigsDir),
+        threshold, w.keep, knownRows = Some(waveRows), hotBandCap = 4096))
+      w.commit(verdictDir, verdict)
+      val admittedSk = sk.join(admittedIds(w, verdictDir), Seq("id"))
+      w.commit(bandsDir, Dedup.MinHashLsh.bandRowsOfSigs(admittedSk))
+      w.commit(sigsDir, admittedSk.select("id", "sig"))
     }
 
   /** Incrementally-maintained APPROX duplicate CLUSTERS — the streaming
@@ -426,72 +348,43 @@ object NearDupStream {
     * from the same banded-candidate + estimator-verify kernel as
     * [[approxWriter]] (signature-only — no shingle set anywhere).
     *
-    * Exactly-once across crash/replay, [[writer]]'s argument specialized:
-    * the fold is a pure function of (batch, COMMITTED ledgers), and the
-    * four sinks commit in the order labels → merges → bands → sigs. At any
-    * kill point the replay's fold re-derives the uncommitted suffix
-    * exactly: with the wave's labels already committed, edge endpoints
-    * resolve to their final components and the fold re-emits identical
-    * rows (a lost merge row re-emerges because the stale label it
-    * redirects still resolves to itself — [[graft.dedup.IncrementalClusters
-    * .foldWave]]'s replay analysis); committed sinks skip via markers.
-    * Cache safety needs no durable-verdict re-read here (contrast
-    * [[writer]]): the label rows are evaluated exactly once, by the FIRST
-    * sink, before any ledger dir is appended — the later sinks' frames
-    * read only the wave sketch (batch-source lineage) and the CC result
-    * (driver- or checkpoint-backed, lineage severed from the ledgers), so
-    * no recacheByPath invalidation can re-derive them against ledgers
-    * containing this batch.
+    * Exactly-once across crash/replay by [[Wave]]'s argument with the
+    * commit order labels → merges → bands → sigs. At any kill point the
+    * replay's fold re-derives the uncommitted suffix exactly: with the
+    * wave's labels already committed, edge endpoints resolve to their
+    * final components and the fold re-emits identical rows (a lost merge
+    * row re-emerges because the stale label it redirects still resolves
+    * to itself — [[graft.dedup.IncrementalClusters.foldWave]]'s replay
+    * analysis). The fold is eager and its label/merge deltas are driver-
+    * or checkpoint-backed, so no durable re-read is needed.
     *
-    * `compactEvery` runs [[compactClusterLedgers]] on [[writer]]'s cadence
-    * contract. Unlike the admission writers it DEFAULTS ON (every 16
-    * waves): uncompacted merge chains grow one level per merging wave,
-    * and while [[graft.dedup.IncrementalClusters.resolveThrough]] now
-    * degrades gracefully past depth 64 (full-closure fallback, never a
-    * wedge), a cluster deployment that never compacts pays
-    * ledger-sized resolution every wave — the cadence keeps steady-state
-    * chains shallow. Pass 0 to manage maintenance externally.
+    * `compactEvery` runs [[compactClusterLedgers]]. Unlike the admission
+    * writers it DEFAULTS ON (every 16 waves): uncompacted merge chains
+    * grow one level per merging wave, and while
+    * [[graft.dedup.IncrementalClusters.resolveThrough]] degrades
+    * gracefully past depth 64 (full-closure fallback, never a wedge), a
+    * cluster deployment that never compacts pays ledger-sized resolution
+    * every wave — the cadence keeps steady-state chains shallow. Pass 0 to
+    * manage maintenance externally.
     */
   def clusterWriter(labelsDir: String, mergesDir: String, bandsDir: String,
       sigsDir: String, textCol: String, idCol: String,
       threshold: Double = 0.5, portable: Boolean = false,
       compactEvery: Int = 16): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
-      val toks = graft.text.TextFunctions.tokens(col(textCol))
-      val sk = batch
-        .select(col(idCol).as("id"),
-          (if (portable) graft.functions.Sketches.minhashTokensPortable(toks)
-           else graft.functions.Sketches.minhashTokens(toks)).as("sig"))
-        .persist()
-      // one count materializes the wave persist AND threads the verify-
+    Wave.writer(compactEvery)(
+        compactClusterLedgers(_, labelsDir, mergesDir, bandsDir, sigsDir)) { w =>
+      val sk = w.keep(sigSketch(w.batch, textCol, idCol, portable))
+      // one count materializes the kept sketch AND threads the verify-
       // broadcast gate (knownRows) — no second driver job inside the fold
       val waveRows = sk.count()
-      val scoped = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-      val waveScope: DataFrame => DataFrame =
-        d => { val p = d.persist(); scoped.add(p); p }
-      try {
-        // the fold is EAGER (resolution counts + the wave-local CC run
-        // inside), so the batch source is always evaluated on a replay
-        // before any marker check — the onReplay hooks can all no-op
-        val (labelRows, mergeRows) = graft.dedup.IncrementalClusters.foldWave(
-          sk, ledgerBandsApprox(spark, bandsDir), ledgerSigs(spark, sigsDir),
-          ledgerLabels(spark, labelsDir), ledgerMerges(spark, mergesDir),
-          threshold, waveScope, knownRows = Some(waveRows),
-          hotBandCap = 4096)
-        IdempotentSink.writer(labelsDir, onReplay = _ => ())(labelRows, batchId)
-        IdempotentSink.writer(mergesDir, onReplay = _ => ())(mergeRows, batchId)
-        IdempotentSink.writer(bandsDir, onReplay = _ => ())(
-          Dedup.MinHashLsh.bandRowsOfSigs(sk), batchId)
-        IdempotentSink.writer(sigsDir, onReplay = _ => ())(
-          sk.select("id", "sig"), batchId)
-      } finally {
-        sk.unpersist()
-        scoped.forEach(_.unpersist())
-      }
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        compactClusterLedgers(spark, labelsDir, mergesDir, bandsDir, sigsDir)
-      ()
+      val (labelRows, mergeRows) = graft.dedup.IncrementalClusters.foldWave(
+        sk, ledgerBandsApprox(w.spark, bandsDir), ledgerSigs(w.spark, sigsDir),
+        ledgerLabels(w.spark, labelsDir), ledgerMerges(w.spark, mergesDir),
+        threshold, w.keep, knownRows = Some(waveRows), hotBandCap = 4096)
+      w.commit(labelsDir, w.own(labelRows))
+      w.commit(mergesDir, w.own(mergeRows))
+      w.commit(bandsDir, Dedup.MinHashLsh.bandRowsOfSigs(sk))
+      w.commit(sigsDir, sk.select("id", "sig"))
     }
 
   /** [[clusterWriter]] under the EXACT-Jaccard contract: the wave's edges
@@ -500,130 +393,85 @@ object NearDupStream {
     * exact admission mode's band + SSET ledgers — O(corpus tokens) at
     * rest, the price of exact semantics ([[clusterWriter]] is the
     * signature-only scale mode). Same labels → merges → bands → sets
-    * commit order and replay argument; the fold's label/merge outputs are
-    * driver-built frames with no ledger lineage at all, so the
-    * cache-invalidation analysis is trivial here. Gated end-to-end by
-    * q110 (the batch fold against q109's from-scratch-closure oracle) and
-    * the StreamingNearDupSpec exact-cluster case. `compactEvery` runs
-    * [[compactClusterLedgersExact]] on the usual cadence contract,
-    * defaulting ON every 16 waves for [[clusterWriter]]'s chain-depth
-    * reason.
+    * commit order and replay argument. Gated end-to-end by q110 (the
+    * batch fold against q109's from-scratch-closure oracle) and the
+    * StreamingNearDupSpec exact-cluster case. `compactEvery` runs
+    * [[compactClusterLedgersExact]], defaulting ON every 16 waves for
+    * [[clusterWriter]]'s chain-depth reason.
     */
   def clusterWriterExact(labelsDir: String, mergesDir: String,
       bandsDir: String, setsDir: String, textCol: String, idCol: String,
       threshold: Double = 0.5, portable: Boolean = false,
       compactEvery: Int = 16): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
-      val toks = graft.text.TextFunctions.tokens(col(textCol))
-      val sk = batch
-        .select(col(idCol).as("id"),
-          (if (portable) graft.functions.Sketches.minhashSigSetPortable(toks)
-           else graft.functions.Sketches.minhashSigSet(toks)).as("ms"))
-        .select(col("id"), col("ms.sig").as("sig"), col("ms.sset").as("sset"))
-        .withColumn("sz", org.apache.spark.sql.functions.size(col("sset")))
-        .persist()
-      val scoped = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-      val waveScope: DataFrame => DataFrame =
-        d => { val p = d.persist(); scoped.add(p); p }
-      try {
-        val (labelRows, mergeRows) =
-          graft.dedup.IncrementalClusters.foldWaveExact(
-            sk, batch, ledgerBands(spark, bandsDir),
-            ledgerSets(spark, setsDir), ledgerLabels(spark, labelsDir),
-            ledgerMerges(spark, mergesDir), threshold, waveScope,
-            hotBandCap = 4096)
-        IdempotentSink.writer(labelsDir, onReplay = _ => ())(labelRows, batchId)
-        IdempotentSink.writer(mergesDir, onReplay = _ => ())(mergeRows, batchId)
-        IdempotentSink.writer(bandsDir, onReplay = _ => ())(
-          Dedup.MinHashLsh.bandRowsOf(sk.select("id", "sig", "sz")), batchId)
-        IdempotentSink.writer(setsDir, onReplay = _ => ())(
-          sk.select("id", "sset"), batchId)
-      } finally {
-        sk.unpersist()
-        scoped.forEach(_.unpersist())
-      }
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        compactClusterLedgersExact(spark, labelsDir, mergesDir, bandsDir,
-          setsDir)
-      ()
+    Wave.writer(compactEvery)(compactClusterLedgersExact(
+        _, labelsDir, mergesDir, bandsDir, setsDir)) { w =>
+      val sk = w.keep(sigSetSketch(w.batch, textCol, idCol, portable))
+      val (labelRows, mergeRows) =
+        graft.dedup.IncrementalClusters.foldWaveExact(
+          sk, w.batch, ledgerBands(w.spark, bandsDir),
+          ledgerSets(w.spark, setsDir), ledgerLabels(w.spark, labelsDir),
+          ledgerMerges(w.spark, mergesDir), threshold, w.keep,
+          hotBandCap = 4096)
+      w.commit(labelsDir, w.own(labelRows))
+      w.commit(mergesDir, w.own(mergeRows))
+      w.commit(bandsDir,
+        Dedup.MinHashLsh.bandRowsOf(sk.select("id", "sig", "sz")))
+      w.commit(setsDir, sk.select("id", "sset"))
     }
 
+  /** Compact the cluster state every cluster deployment shares — labels
+    * id-bucketed with their stored labels REWRITTEN through the current
+    * merge closure, merges old_label-bucketed in DEPTH-1 CLOSURE FORM
+    * (old_label → final root). The closure is read from the merges
+    * ledger's committed rows at compact time — safe for the same reason
+    * [[compactLedgers]]' sz backfill reads the sset ledger: rows are only
+    * ever added, and applying a merge redirect twice is a no-op. Merge rows
+    * are never dropped (labels batch dirs committed after the labels
+    * compaction still carry stale labels that must keep resolving), but
+    * every chain collapses, so per-wave resolution is one join until
+    * chains regrow. The closure frame is SHARED by the two transforms (one
+    * closure computation per call — its driver union-find recurs on every
+    * read-path use). Each deployment's `compactX` composes this with its
+    * own ledgers'; all compact INDEPENDENTLY (rows, not generations, carry
+    * the semantics), so a crash between any two resumes idempotently.
+    */
+  private[streaming] def compactClusterState(spark: SparkSession,
+      labelsDir: String, mergesDir: String,
+      buckets: Int): (Option[String], Option[String]) = {
+    import org.apache.spark.sql.functions.coalesce
+    lazy val closure = graft.dedup.IncrementalClusters
+      .mergeClosure(ledgerMerges(spark, mergesDir))
+    (LedgerCompaction.compact(spark, labelsDir, LabelsSchema, Seq("id"),
+        buckets, labels => labels
+          .join(closure.withColumnRenamed("old_label", "label"),
+            Seq("label"), "left")
+          .select(col("id"), coalesce(col("root"), col("label")).as("label"))),
+      LedgerCompaction.compact(spark, mergesDir, MergesSchema,
+        Seq("old_label"), buckets, _ => closure
+          .filter(col("old_label") =!= col("root"))
+          .select(col("old_label"), col("root").as("new_label"))))
+  }
+
   /** [[compactClusterLedgers]] for the exact-mode cluster deployment:
-    * labels/merges as there; bands under the EXACT schema with the
-    * kpfx/sz backfill reading the sset ledger ([[compactLedgers]]' hook);
-    * ssets id-bucketed. */
+    * the shared cluster state, then bands and ssets via [[compactLedgers]]. */
   def compactClusterLedgersExact(spark: SparkSession, labelsDir: String,
       mergesDir: String, bandsDir: String, setsDir: String,
       buckets: Int = 8): (Option[String], Option[String], Option[String],
         Option[String]) = {
-    lazy val closure = graft.dedup.IncrementalClusters
-      .mergeClosure(ledgerMerges(spark, mergesDir))
-    (LedgerCompaction.compact(spark, labelsDir, LabelsSchema, Seq("id"),
-        buckets, resolveLabelRows(closure)),
-      LedgerCompaction.compact(spark, mergesDir, MergesSchema,
-        Seq("old_label"), buckets, closureFormOf(closure)),
-      LedgerCompaction.compact(spark, bandsDir, BandsSchema,
-        Seq("band", "bkey"), buckets,
-        backfillBands(ledgerSets(spark, setsDir))),
-      LedgerCompaction.compact(spark, setsDir, SetsSchema,
-        Seq("id"), buckets))
+    val (l, m) = compactClusterState(spark, labelsDir, mergesDir, buckets)
+    val (b, st) = compactLedgers(spark, bandsDir, setsDir, buckets)
+    (l, m, b, st)
   }
 
-  /** [[compactLedgersApprox]] extended to the cluster deployment's four
-    * ledgers. Labels compact id-bucketed with their stored labels
-    * REWRITTEN through the current merge closure (read from the merges
-    * ledger's committed rows at compact time — safe for the same reason
-    * [[compactLedgers]]' sz backfill reads the sset ledger: rows are only
-    * ever added, and applying a merge redirect twice is a no-op). Merges
-    * compact old_label-bucketed and rewritten to DEPTH-1 CLOSURE FORM
-    * (old_label → final root): rows are never dropped — labels batch dirs
-    * committed after the labels compaction still carry stale labels that
-    * must keep resolving — but every chain collapses, so per-wave
-    * resolution is one join until chains regrow. Bands/sigs compact as in
-    * [[compactLedgersApprox]]. The four compact INDEPENDENTLY (rows, not
-    * generations, carry the semantics); a crash between any two resumes
-    * idempotently.
-    */
+  /** Maintenance for the approx cluster deployment's four ledgers: the
+    * shared cluster state ([[compactClusterState]]), then bands and sigs
+    * via [[compactLedgersApprox]]. */
   def compactClusterLedgers(spark: SparkSession, labelsDir: String,
       mergesDir: String, bandsDir: String, sigsDir: String,
       buckets: Int = 8): (Option[String], Option[String], Option[String],
         Option[String]) = {
-    lazy val closure = graft.dedup.IncrementalClusters
-      .mergeClosure(ledgerMerges(spark, mergesDir))
-    (LedgerCompaction.compact(spark, labelsDir, LabelsSchema, Seq("id"),
-        buckets, resolveLabelRows(closure)),
-      LedgerCompaction.compact(spark, mergesDir, MergesSchema,
-        Seq("old_label"), buckets, closureFormOf(closure)),
-      LedgerCompaction.compact(spark, bandsDir, ApproxBandsSchema,
-        Seq("band", "bkey"), buckets, backfillKpfx),
-      LedgerCompaction.compact(spark, sigsDir, SigsSchema,
-        Seq("id"), buckets))
+    val (l, m) = compactClusterState(spark, labelsDir, mergesDir, buckets)
+    val (b, sg) = compactLedgersApprox(spark, bandsDir, sigsDir, buckets)
+    (l, m, b, sg)
   }
-
-  /** Labels-compaction transform: redirect every stored label through the
-    * merge closure. Pure and schema-preserving; no-op on already-resolved
-    * rows. The closure frame is SHARED with the merges transform of the
-    * same maintenance call (one closure computation per call, not two —
-    * the closure's driver union-find recurs on every read-path use, so
-    * sharing halves the maintenance cadence's recurring cost); under the
-    * driver gate it is a parallelized local result, free to reuse. */
-  private[streaming] def resolveLabelRows(closure: => DataFrame)(labels: DataFrame): DataFrame =
-    labels
-      .join(closure.withColumnRenamed("old_label", "label"),
-        Seq("label"), "left")
-      .select(col("id"),
-        org.apache.spark.sql.functions.coalesce(
-          col("root"), col("label")).as("label"))
-
-  /** Merges-compaction transform: rewrite each redirect to its transitive
-    * root (depth-1 closure form), keeping every old_label. The shared
-    * closure is computed from the LEDGER's committed rows at apply time —
-    * the same row SET as the transform's own input (batch dirs at or
-    * below the generation version duplicate generation rows, and the
-    * closure is duplicate-insensitive), so the rewrite stays pure. */
-  private[streaming] def closureFormOf(closure: => DataFrame)(merges: DataFrame): DataFrame =
-    closure
-      .filter(col("old_label") =!= col("root"))
-      .select(col("old_label"), col("root").as("new_label"))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.{avg, col, count, lit, max}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType,
   IntegerType, LongType, StructField, StructType}
 
-import graft.dedup.{IncrementalClusters, SemanticDedup}
+import graft.dedup.SemanticDedup
 
 /** Streaming SEMANTIC duplicate clusters — the SemDeDup mirror of
   * [[NearDupStream.clusterWriter]], completing the streaming story for the
@@ -22,8 +22,8 @@ import graft.dedup.{IncrementalClusters, SemanticDedup}
   * [[LedgerCompaction]] contracts), all O(corpus rows) or
   * O(distinct vectors):
   *
-  *  - labels/merges: [[IncrementalClusters]]' cluster state, identical to
-  *    the minhash cluster writers';
+  *  - labels/merges: [[graft.dedup.IncrementalClusters]]' cluster state,
+  *    identical to the minhash cluster writers';
   *  - `membersDir` (id, cell, centroid_sim): per-vector output metadata
   *    for the exemplar pick, id-bucketed at rest;
   *  - `repsDir` (cell, rep, ce, cn2): one row per DISTINCT vector — the
@@ -95,40 +95,25 @@ object SemanticStream {
       repsDir: String, fpsDir: String, vecCol: String, idCol: String,
       centroids: DataFrame, threshold: Double = 0.97,
       compactEvery: Int = 16): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
-      val asg = SemanticDedup.assignWithSim(
-        batch.select(col(idCol).as("vec_id"), col(vecCol).as("embedding")),
-        centroids).persist()
-      val scoped = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-      val waveScope: DataFrame => DataFrame =
-        d => { val p = d.persist(); scoped.add(p); p }
-      try {
-        // the fold is EAGER (edge counts + the wave-local CC run inside),
-        // so the batch source is evaluated on a replay before any marker
-        // check, and the wave-scoped mid-frames (the fps probe the
-        // rep/fp deltas project from) are materialized BEFORE any ledger
-        // dir is appended — the later sinks read cached blocks, never a
-        // re-derivation against ledgers already containing this batch
-        val (labelRows, mergeRows, memberRows, repRows, fpRows) =
-          SemanticDedup.foldWaveSemantic(asg,
-            ledgerReps(spark, repsDir), ledgerFps(spark, fpsDir),
-            NearDupStream.ledgerLabels(spark, labelsDir),
-            NearDupStream.ledgerMerges(spark, mergesDir),
-            threshold, waveScope)
-        IdempotentSink.writer(labelsDir, onReplay = _ => ())(labelRows, batchId)
-        IdempotentSink.writer(mergesDir, onReplay = _ => ())(mergeRows, batchId)
-        IdempotentSink.writer(membersDir, onReplay = _ => ())(memberRows, batchId)
-        IdempotentSink.writer(repsDir, onReplay = _ => ())(repRows, batchId)
-        IdempotentSink.writer(fpsDir, onReplay = _ => ())(fpRows, batchId)
-      } finally {
-        asg.unpersist()
-        scoped.forEach(_.unpersist())
-      }
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        compactSemanticLedgers(spark, labelsDir, mergesDir, membersDir,
-          repsDir, fpsDir)
-      ()
+    Wave.writer(compactEvery)(compactSemanticLedgers(
+        _, labelsDir, mergesDir, membersDir, repsDir, fpsDir)) { w =>
+      val asg = w.keep(SemanticDedup.assignWithSim(
+        w.batch.select(col(idCol).as("vec_id"), col(vecCol).as("embedding")),
+        centroids))
+      // the fold is EAGER (edge counts + the wave-local CC run inside): the
+      // kept mid-frames the rep/fp deltas project from are materialized
+      // BEFORE any ledger dir is appended
+      val (labelRows, mergeRows, memberRows, repRows, fpRows) =
+        SemanticDedup.foldWaveSemantic(asg,
+          ledgerReps(w.spark, repsDir), ledgerFps(w.spark, fpsDir),
+          NearDupStream.ledgerLabels(w.spark, labelsDir),
+          NearDupStream.ledgerMerges(w.spark, mergesDir),
+          threshold, w.keep)
+      w.commit(labelsDir, w.own(labelRows))
+      w.commit(mergesDir, w.own(mergeRows))
+      w.commit(membersDir, memberRows)
+      w.commit(repsDir, w.own(repRows))
+      w.commit(fpsDir, fpRows)
     }
 
   // ==== streaming semantic ADMISSION (with the eval-exclusion gate) =========
@@ -163,12 +148,8 @@ object SemanticStream {
     *     the reps ledger via [[SemanticDedup.admitVsReps]] — the
     *     at-rest corpus side is already assigned and cell-bucketed, so
     *     the probe never re-runs the O(corpus) argmax;
-    *  4. verdict-first / ledger-last commit order: a crash window
-    *     between the two leaves committed verdicts and a missing reps
-    *     delta, healed on replay by re-deriving the delta from the
-    *     JUST-COMMITTED verdict parquet (marker skips the verdict
-    *     write; the reps derivation is a pure function of the committed
-    *     rows + the batch).
+    *  4. [[Wave]]'s verdict-first / ledger-last commit order, with the
+    *     reps delta derived from the committed verdict rows.
     *
     * State = ONE ledger: `repsDir` (cell, rep, ce, cn2), one row per
     * admitted distinct nonzero vector, cell-bucketed by
@@ -184,56 +165,37 @@ object SemanticStream {
       idCol: String, centroids: DataFrame, evalSet: DataFrame,
       dupThreshold: Double = 0.97, decontamThreshold: Double = 0.97,
       compactEvery: Int = 16): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
+    Wave.writer(compactEvery)(compactAdmitLedger(_, repsDir)) { w =>
       import org.apache.spark.sql.functions.{coalesce, when}
-      val spark = batch.sparkSession
-      val b = batch.select(col(idCol).as("vec_id"),
-        col(vecCol).as("embedding")).persist()
-      val scoped = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-      val waveScope: DataFrame => DataFrame =
-        d => { val p = d.persist(); scoped.add(p); p }
-      try {
-        val contam = waveScope(SemanticDedup.semanticDecontaminate(
-          b, evalSet, decontamThreshold))
-        val clean = b.join(
-          contam.filter(col("contaminated")).select("vec_id"),
-          Seq("vec_id"), "left_anti")
-        val admit = SemanticDedup.admitVsReps(clean,
-            ledgerReps(spark, repsDir)
-              .select(col("rep"), col("cell"), col("ce"), col("cn2")),
-            dupThreshold, centroids, waveScope)
-          .withColumnRenamed("admitted", "clean_admitted")
-          .withColumnRenamed("first_match", "dup_match")
-        // the verdict is MATERIALIZED (waveScope) before any ledger
-        // append — the later reps write must not re-derive it against a
-        // ledger already containing this batch (the writer-family
-        // invalidation argument)
-        val verdict = waveScope(contam
-          .select(col("vec_id"), col("contaminated"),
-            when(col("contaminated"), col("first_match")).as("eval_match"))
-          .join(admit, Seq("vec_id"), "left")
-          .select(col("vec_id"),
-            coalesce(col("clean_admitted"), lit(false)).as("admitted"),
-            col("dup_match").as("first_match"),
-            col("contaminated"), col("eval_match")))
-        IdempotentSink.writer(verdictDir,
-          onReplay = _ => batch.foreach(_ => ()))(verdict, batchId)
-        // reps delta off the COMMITTED verdict rows (crash-window heal:
-        // a replay re-derives the identical delta from durable parquet)
-        val admitted = spark.read.parquet(s"$verdictDir/batch=$batchId")
-          .filter(col("admitted")).select("vec_id")
-        val newReps = graft.similarity.Ann.indexWithCentroids(
-            b.join(admitted, Seq("vec_id")), centroids).assigned
-          .filter(col("cn2") > 0)
-          .select(col("cell"), col("nid").as("rep"), col("ce"), col("cn2"))
-        IdempotentSink.writer(repsDir, onReplay = _ => ())(newReps, batchId)
-      } finally {
-        b.unpersist()
-        scoped.forEach(_.unpersist())
-      }
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        compactAdmitLedger(spark, repsDir)
-      ()
+      val b = w.keep(w.batch.select(col(idCol).as("vec_id"),
+        col(vecCol).as("embedding")))
+      val contam = w.keep(SemanticDedup.semanticDecontaminate(
+        b, evalSet, decontamThreshold))
+      val clean = b.join(
+        contam.filter(col("contaminated")).select("vec_id"),
+        Seq("vec_id"), "left_anti")
+      val admit = SemanticDedup.admitVsReps(clean,
+          ledgerReps(w.spark, repsDir)
+            .select(col("rep"), col("cell"), col("ce"), col("cn2")),
+          dupThreshold, centroids, w.keep)
+        .withColumnRenamed("admitted", "clean_admitted")
+        .withColumnRenamed("first_match", "dup_match")
+      val verdict = w.keep(contam
+        .select(col("vec_id"), col("contaminated"),
+          when(col("contaminated"), col("first_match")).as("eval_match"))
+        .join(admit, Seq("vec_id"), "left")
+        .select(col("vec_id"),
+          coalesce(col("clean_admitted"), lit(false)).as("admitted"),
+          col("dup_match").as("first_match"),
+          col("contaminated"), col("eval_match")))
+      w.commit(verdictDir, verdict)
+      val admitted = w.committed(verdictDir)
+        .filter(col("admitted")).select("vec_id")
+      val newReps = graft.similarity.Ann.indexWithCentroids(
+          b.join(admitted, Seq("vec_id")), centroids).assigned
+        .filter(col("cn2") > 0)
+        .select(col("cell"), col("nid").as("rep"), col("ce"), col("cn2"))
+      w.commit(repsDir, newReps)
     }
 
   /** Compact the admission reps ledger into one cell-bucketed table —
@@ -367,21 +329,16 @@ object SemanticStream {
   }
 
   /** [[NearDupStream.compactClusterLedgers]] for the semantic deployment's
-    * five ledgers: labels id-bucketed with stored labels rewritten through
-    * the shared merge closure, merges old_label-bucketed in depth-1
-    * closure form, members on id, reps on cell, fps on cefp. The five
-    * compact INDEPENDENTLY (rows, not generations, carry the semantics);
-    * a crash between any two resumes idempotently. */
+    * five ledgers: the shared cluster state
+    * ([[NearDupStream.compactClusterState]]), then members on id, reps on
+    * cell, fps on cefp. */
   def compactSemanticLedgers(spark: SparkSession, labelsDir: String,
       mergesDir: String, membersDir: String, repsDir: String,
       fpsDir: String, buckets: Int = 8): (Option[String], Option[String],
         Option[String], Option[String], Option[String]) = {
-    lazy val closure = IncrementalClusters
-      .mergeClosure(NearDupStream.ledgerMerges(spark, mergesDir))
-    (LedgerCompaction.compact(spark, labelsDir, NearDupStream.LabelsSchema,
-        Seq("id"), buckets, NearDupStream.resolveLabelRows(closure)),
-      LedgerCompaction.compact(spark, mergesDir, NearDupStream.MergesSchema,
-        Seq("old_label"), buckets, NearDupStream.closureFormOf(closure)),
+    val (l, m) = NearDupStream.compactClusterState(spark, labelsDir,
+      mergesDir, buckets)
+    (l, m,
       LedgerCompaction.compact(spark, membersDir, MembersSchema,
         Seq("id"), buckets),
       LedgerCompaction.compact(spark, repsDir, RepsSchema,

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
@@ -21,7 +20,7 @@ class CurationStreamSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def freshDir(tag: String) = Files.createTempDirectory(tag).toString
+  import TestSpark.freshDir
 
   private val longA = "alpha beta gamma delta epsilon zeta eta theta iota " +
     "kappa lambda mu nu xi omicron pi rho sigma tau upsilon"

@@ -343,7 +343,7 @@ class DedupSpec extends AnyFunSuite {
         val core = words(240)
         Seq((i * 2L, s"$core ${words(60)}"), (i * 2L + 1, s"$core ${words(60)}"))
       }
-      val dir = java.nio.file.Files.createTempDirectory("graft-siggate").toString
+      val dir = TestSpark.freshDir("graft-siggate")
       rows.toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
       val docs = spark.read.parquet(dir)
       assert(docs.queryExecution.optimizedPlan.stats.sizeInBytes > 100000,

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
@@ -82,7 +81,7 @@ class HeadwaysSpec extends AnyFunSuite {
   }
 
   test("zero-files fallback: empty typed relation, not an error (H6)") {
-    val tmp = Files.createTempDirectory("graft-empty-raw").toString
+    val tmp = TestSpark.freshDir("graft-empty-raw")
     val stg = StgArrivals(spark, tmp)
     assert(stg.schema == Schemas.stgArrivals)
     assert(stg.count() == 0)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.time.Instant
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -51,7 +50,7 @@ class IncrementalSpec extends AnyFunSuite {
   }
 
   test("Jobs.transformIncremental: per-date partitions equal full transform") {
-    val root = Files.createTempDirectory("graft-inc").toString
+    val root = TestSpark.freshDir("graft-inc")
     val raw = s"$root/raw"
     // ingest two dates of synthetic polls (same generator as JobsSpec)
     val days = Seq("2025-11-20", "2025-11-21")
@@ -96,7 +95,7 @@ class IncrementalSpec extends AnyFunSuite {
   }
 
   test("transformIncremental on a date with no raw files writes empty partitions") {
-    val root = Files.createTempDirectory("graft-inc-empty").toString
+    val root = TestSpark.freshDir("graft-inc-empty")
     val raw = s"$root/raw"
     (0 until 3).foreach { i =>
       val at = Instant.parse("2025-11-20T10:00:00Z").plusSeconds(i * 120L)
@@ -113,7 +112,7 @@ class IncrementalSpec extends AnyFunSuite {
   }
 
   test("state path consults staged partitions NEWER than the state (crash gap)") {
-    val root = Files.createTempDirectory("graft-inc-gap").toString
+    val root = TestSpark.freshDir("graft-inc-gap")
     val raw = s"$root/raw"
     val days = Seq("2025-11-20", "2025-11-21", "2025-11-22")
     days.foreach { d =>

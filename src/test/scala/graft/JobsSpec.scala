@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.functions._
@@ -48,7 +47,7 @@ class JobsSpec extends AnyFunSuite {
   }
 
   test("ingest appends hive-date-partitioned snapshots; transform builds silver; checks pass") {
-    val root = Files.createTempDirectory("graft-e2e").toString
+    val root = TestSpark.freshDir("graft-e2e")
     val raw = s"$root/raw"
     val n = ingestThreePolls(raw)
     assert(n > 0)
@@ -67,7 +66,7 @@ class JobsSpec extends AnyFunSuite {
   }
 
   test("transform's observed checks equal one Expectations.run scan per group") {
-    val root = Files.createTempDirectory("graft-checks").toString
+    val root = TestSpark.freshDir("graft-checks")
     val raw = s"$root/raw"
     ingestThreePolls(raw)
     val results = Jobs.transform(spark, raw, s"$root/silver")
@@ -76,7 +75,7 @@ class JobsSpec extends AnyFunSuite {
   }
 
   test("above 10k staged rows the GX checks count only their 10k sample") {
-    val root = Files.createTempDirectory("graft-checks-big").toString
+    val root = TestSpark.freshDir("graft-checks-big")
     val raw = s"$root/raw"
     // one raw snapshot of 10,050 rows in one file, so staging is one file
     // in row order and the 10k sample is its first 10,000 rows. Rows 0-9
@@ -106,7 +105,7 @@ class JobsSpec extends AnyFunSuite {
   }
 
   test("transform over an empty raw zone returns 11 passing checks") {
-    val root = Files.createTempDirectory("graft-empty").toString
+    val root = TestSpark.freshDir("graft-empty")
     val results = Jobs.transform(spark, s"$root/raw", s"$root/silver")
     assert(results.map(_.name) == checksByScan(s"$root/silver").map(_.name))
     assert(results.size == 11 && results.forall(r => r.passed && r.failures == 0))
@@ -114,7 +113,7 @@ class JobsSpec extends AnyFunSuite {
   }
 
   test("transform on three polls runs as at most 5 Spark jobs") {
-    val root = Files.createTempDirectory("graft-jobcount").toString
+    val root = TestSpark.freshDir("graft-jobcount")
     val raw = s"$root/raw"
     ingestThreePolls(raw)
     val sc = spark.sparkContext
@@ -140,7 +139,7 @@ class JobsSpec extends AnyFunSuite {
   }
 
   test("align writes one flat snapshot for the requested line, enriched via broadcast lookup") {
-    val root = Files.createTempDirectory("graft-align").toString
+    val root = TestSpark.freshDir("graft-align")
     val df = Jobs.align(spark, "central", root, t0, SyntheticArrivals.transport(t0),
       stops = SyntheticArrivals.Stops.map(s => s -> s"Station $s"))
     assert(df.filter(col("line_id") =!= "central").count() == 0)
@@ -158,7 +157,7 @@ class JobsSpec extends AnyFunSuite {
   }
 
   test("streaming AvailableNow recompute matches the batch transform") {
-    val root = Files.createTempDirectory("graft-stream").toString
+    val root = TestSpark.freshDir("graft-stream")
     val raw = s"$root/raw"
     (0 until 2).foreach { i =>
       val at = t0.plusSeconds(i * 120L)
@@ -174,7 +173,7 @@ class JobsSpec extends AnyFunSuite {
   }
 
   test("incremental stream: per-key gap state matches the batch mart's gaps") {
-    val root = Files.createTempDirectory("graft-incr").toString
+    val root = TestSpark.freshDir("graft-incr")
     val raw = s"$root/raw"
     (0 until 3).foreach { i =>
       val at = t0.plusSeconds(i * 120L)
@@ -194,7 +193,7 @@ class JobsSpec extends AnyFunSuite {
   }
 
   test("watermarked windowed aggregation over the raw stream") {
-    val root = Files.createTempDirectory("graft-window").toString
+    val root = TestSpark.freshDir("graft-window")
     val raw = s"$root/raw"
     (0 until 2).foreach { i =>
       val at = t0.plusSeconds(i * 120L)
@@ -224,7 +223,7 @@ class JobsSpec extends AnyFunSuite {
   }
 
   test("ingest is idempotent under replay: same poll instant writes once") {
-    val root = Files.createTempDirectory("graft-replay").toString
+    val root = TestSpark.freshDir("graft-replay")
     val raw = s"$root/raw"
     Jobs.ingest(spark, raw, t0, SyntheticArrivals.transport(t0))
     val rowsAfterFirst = graft.etl.StgArrivals(spark, raw).count()

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -18,7 +17,7 @@ class LedgerCompactionSpec extends AnyFunSuite {
 
   private val schema = StructType(Seq(StructField("k", LongType)))
 
-  private def freshDir(tag: String) = Files.createTempDirectory(tag).toString
+  import TestSpark.freshDir
 
   private def writeBatch(dir: String, id: Long, ks: Seq[Long]): Unit =
     IdempotentSink.writer(dir)(ks.toDF("k"), id)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.time.Instant
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,7 +18,7 @@ class LineageSpec extends AnyFunSuite {
   private val t0 = Instant.parse("2025-11-20T10:00:00Z")
 
   test("transform emits one START/COMPLETE pair with dataset URIs") {
-    val root = Files.createTempDirectory("graft-lineage").toString
+    val root = TestSpark.freshDir("graft-lineage")
     val raw = s"$root/raw"
     Jobs.ingest(spark, raw, t0, SyntheticArrivals.transport(t0))
     val sink = new BufferSink
@@ -53,7 +52,7 @@ class LineageSpec extends AnyFunSuite {
   }
 
   test("listener derives datasets from the executed plan (scan in, insert out)") {
-    val root = Files.createTempDirectory("graft-lineage-listener").toString
+    val root = TestSpark.freshDir("graft-lineage-listener")
     import spark.implicits._
     Seq((1, "a"), (2, "b")).toDF("id", "v").write.parquet(s"$root/src")
 

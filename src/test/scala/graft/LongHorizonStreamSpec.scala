@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,7 +22,7 @@ class LongHorizonStreamSpec extends AnyFunSuite {
 
   test("24 waves with cadence compaction: per-wave task counts are " +
       "phase-flat across cycles; ledger dirs stay bounded") {
-    val root = Files.createTempDirectory("graft-longhorizon").toString
+    val root = TestSpark.freshDir("graft-longhorizon")
     val out = s"$root/out"; val bands = s"$root/bands"; val sets = s"$root/sets"
     val cadence = 8
     val waves = 3 * cadence

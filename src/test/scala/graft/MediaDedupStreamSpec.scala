@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.streaming.Trigger
@@ -17,7 +16,7 @@ class MediaDedupStreamSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def freshDir(tag: String) = Files.createTempDirectory(tag).toString
+  import TestSpark.freshDir
 
   /** Brute-force reference: reject iff within maxH of an ADMITTED doc or a
     * smaller-id doc of the same wave (raw); first_match = min matching id. */

@@ -66,13 +66,6 @@ class PlanSpec extends AnyFunSuite {
     import graft.core.{Layout, Tables}
     Seq("li_bkt", "o_bkt").foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(s"spark-warehouse/$t")
-      if (loc.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(loc)
-      }
     }
     val li = Tables.lineitem(spark, dir).select("l_orderkey", "l_quantity")
     val o = Tables.orders(spark, dir).select("o_orderkey", "o_totalprice")

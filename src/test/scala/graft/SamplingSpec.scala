@@ -87,7 +87,7 @@ class SamplingSpec extends AnyFunSuite {
   }
 
   test("compaction merges small files losslessly to the computed count") {
-    val root = java.nio.file.Files.createTempDirectory("graft-compact").toString
+    val root = TestSpark.freshDir("graft-compact")
     val docs = Tables.documents(spark, dir)
     docs.repartition(17).write.parquet(s"$root/zone")
     val before = spark.read.parquet(s"$root/zone")
@@ -106,7 +106,7 @@ class SamplingSpec extends AnyFunSuite {
   }
 
   test("compaction aborts (keeping tmp) when the swap is blocked") {
-    val root = java.nio.file.Files.createTempDirectory("graft-compact-abort").toString
+    val root = TestSpark.freshDir("graft-compact-abort")
     val docs = Tables.documents(spark, dir)
     docs.limit(50).repartition(3).write.parquet(s"$root/zone")
     // interrupted-run leftover: a destination NAME occupied by a non-empty

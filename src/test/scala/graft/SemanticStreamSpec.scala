@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.streaming.Trigger
@@ -20,7 +19,7 @@ class SemanticStreamSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def freshDir(tag: String) = Files.createTempDirectory(tag).toString
+  import TestSpark.freshDir
 
   // dim-4 fixture with pinned cosine structure (all unit-norm, so the
   // thresholds are exact dot products): vx/vy share cell 1 at cos 0.92

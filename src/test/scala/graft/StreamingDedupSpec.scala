@@ -16,7 +16,7 @@ class StreamingDedupSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def freshDir(tag: String) = Files.createTempDirectory(tag).toString
+  import TestSpark.freshDir
 
   test("3 waves with cross-wave overlap: first occurrence wins, restart adds nothing") {
     val root = freshDir("graft-dedup-stream")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.streaming.Trigger
@@ -17,7 +16,7 @@ class StreamingNearDupSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def freshDir(tag: String) = Files.createTempDirectory(tag).toString
+  import TestSpark.freshDir
 
   private val base = "the quick brown fox jumps over the lazy dog and then " +
     "runs far away into the deep green forest before the sun sets tonight"

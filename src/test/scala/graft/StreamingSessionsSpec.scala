@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
@@ -16,7 +15,7 @@ import graft.streaming.Sessions
 class StreamingSessionsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def freshDir(tag: String) = Files.createTempDirectory(tag).toString
+  import TestSpark.freshDir
 
   test("streaming session_window agg equals the batch sessionAgg") {
     val root = freshDir("graft-sess")

@@ -16,8 +16,16 @@ import graft.core.GraftSession
   * call instead of assuming an empty dir.
   */
 object TestSpark {
-  val checkpointDir: String =
-    java.nio.file.Files.createTempDirectory("graft-test-ckpt").toString
+  /** A new temp dir for one test's files, deleted when the JVM exits. */
+  def freshDir(tag: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(tag).toString
+    sys.addShutdownHook {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d))
+    }
+    d
+  }
+
+  val checkpointDir: String = freshDir("graft-test-ckpt")
 
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -26,12 +34,12 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost")
+      // compacted ledgers are metastore tables: keep them in this run's
+      // temp dir, not in ./spark-warehouse
+      .config("spark.sql.warehouse.dir", freshDir("graft-test-warehouse"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s.sparkContext.setCheckpointDir(checkpointDir)
-    sys.addShutdownHook {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(checkpointDir))
-    }
     GraftSession.tune(s)
   }
 

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -65,7 +64,7 @@ class TransientCacheSpec extends AnyFunSuite {
     // (memoized fixtures) may be live — diff the persistent-RDD set
     // around the wave instead of asserting emptiness
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val root = Files.createTempDirectory("graft-wavescope").toString
+    val root = TestSpark.freshDir("graft-wavescope")
     val in = s"$root/in"
     Seq((0L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
         (1L, "one two three four five six seven eight nine ten eleven"))
